@@ -68,7 +68,7 @@ MODEL_HEADLINE = [
 
 def _warmup(spark, sf_dir: str) -> None:
     """One throwaway action through each execution path — parquet scan,
-    shuffle/exchange, window sort, Arrow/pandas-UDF worker — so the
+    shuffle/exchange, window sort, Arrow-UDF Python worker — so the
     per-query timings below measure the PLAN, not whichever query
     happens to pay one-time JVM JIT / codegen-infra / Python-worker
     spin-up first.  Steady-state is what a long-running cluster session
@@ -78,13 +78,14 @@ def _warmup(spark, sf_dir: str) -> None:
 
     from getdbt_spark.io import load_table
 
-    @F.pandas_udf(LongType())
+    # the Arrow UDF path every package kernel takes
+    @F.arrow_udf(LongType())
     def _noop_udf(s):
         return s
 
     # One task per core: a single-partition warm-up would spin up ONE
     # of local[32]'s Python workers and leave the other 31 cold starts
-    # inside whichever benchmarked query first fans out a pandas UDF.
+    # inside whichever benchmarked query first fans out an Arrow UDF.
     # Column-less repartition is round-robin (exactly even); hashing a
     # "wid" column instead would leave ~1/e of the partitions empty
     # (birthday collisions) and those workers cold.
@@ -324,6 +325,10 @@ def main() -> None:
         best_canary = spark_canary
         for name in [n for n, ok in sorted(verdicts.items()) if not ok]:
             reps = 0
+            # 0 == flagged and attempted, but every retry window was
+            # skipped (collapsed canary or wall budget) — distinct from
+            # an unflagged query, which has no entry
+            retried[name] = 0
             # collapse-waits do NOT consume the rep budget (the wall
             # bound caps them): a slow canary would otherwise eat every
             # retry and leave the flagged in-window reading in place
@@ -377,10 +382,10 @@ def main() -> None:
                 # over more reps only tightens; see the collapse-aware
                 # re-measure block) — r13 measurement-robustness fix.
                 "passes": 2,
-                # Gate-flagged queries that received canary-gated extra
-                # reps this run, with the rep count (empty when every
-                # query passed on min-of-two) — r13 ADVICE: the artifact
-                # must record which timings carry the extra-rep
+                # Gate-flagged queries with their count of canary-gated
+                # extra reps (0 when every retry was skipped; empty when
+                # every query passed on min-of-two) — r13 ADVICE: the
+                # artifact must record which timings carry the extra-rep
                 # advantage.
                 "retried": retried,
                 # Host-speed canary: identical CPU work every round —

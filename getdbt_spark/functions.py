@@ -79,8 +79,8 @@ def ntz_from_epoch_us(col: Column | str) -> Column:
 
     Pure micros addition onto the NTZ epoch — no zone consulted, exact
     for any value an NTZ can hold.  This is the JVM-side reconstruction
-    step of the micros-long kernel contract: pandas kernels exchange
-    event time as int64 epoch micros (immune to Arrow's ns coercion,
+    step of the micros-long kernel contract: the stateful streaming
+    kernel exchanges event time as int64 epoch micros (immune to Arrow's ns coercion,
     which dies past 2262-04-11), and the timestamp face is rebuilt
     here, after the kernel."""
     return F.timestamp_add("MICROSECOND", _col(col), _ntz_epoch_lit())
@@ -605,14 +605,13 @@ def _nan_group_to_null(df: DataFrame, name: str) -> DataFrame:
     """Normalize NaN group values to NULL in the materialized group
     column of the grouped rank/cumsum helpers.
 
-    The Arrow kernels cannot distinguish NULL from NaN after pandas
-    conversion (both arrive as NaN in a float64 column), so the kernel
-    folds them into one group — but ``groupBy`` and the ``eqNullSafe``
-    offsets join treat NaN as an ordinary value distinct from NULL.
-    For a float group column holding both, the three layers would
-    disagree and ranks would diverge from any consistent contract.
-    Normalizing NaN → NULL up front makes all three agree on ONE
-    group.  Documented contract: these helpers treat NaN ≡ NULL for
+    The Arrow kernels see NULL and NaN apart, but fold them into one
+    group on purpose (their ``_nullg`` sentinel), while ``groupBy``
+    and the ``eqNullSafe`` offsets join treat NaN as an ordinary value
+    distinct from NULL.  For a float group column holding both, the
+    three layers would disagree and ranks would diverge from any
+    consistent contract.  Normalizing NaN → NULL up front makes all
+    three agree on ONE group.  Documented contract: these helpers treat NaN ≡ NULL for
     floating-point group keys (SQL windows would keep them distinct —
     don't group on floats if that distinction matters)."""
     dt = df.schema[name].dataType

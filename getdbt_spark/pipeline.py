@@ -8,18 +8,23 @@ large-scale training-data pipeline needs, built Spark-first —
 - **Deduplication**: exact (hash groupBy), near-dup via MinHash+LSH
   (shingle → minhash signature → banded bucket join → exact-Jaccard
   verify), SimHash fingerprints, embedding-cosine near-dup.
-- **Similarity search**: brute-force cosine top-k (correctness
-  baseline) and two bucketed 100 TB scale paths — IVF (centroid
+- **Similarity search**: exact cosine top-k as a distributed block
+  matrix product and two bucketed 100 TB scale paths — IVF (centroid
   assignment) and random-hyperplane LSH (no centroid fit).
 - **Text analysis**: quality scoring, language-ID heuristic, token
   statistics, document fingerprinting.
 - **Multimodal columns**: binary payload + typed metadata, decoded
-  via an Arrow-batched ``mapInPandas`` stub.
+  by a stub kernel.
 
-Everything except the multimodal decode stub is pure JVM-side Column
-expressions (``transform``/``zip_with``/``aggregate`` higher-order
-functions) — no Python in the hot path, so whole-stage codegen covers
-each operator end to end.
+Relational and per-row work is JVM-side Column expressions
+(``transform``/``zip_with``/``aggregate`` higher-order functions), so
+whole-stage codegen covers it.  Work that vectorizes in numpy but not
+in Catalyst runs as a Python kernel, and every such kernel has ONE
+style: Arrow record batches in and out (``F.arrow_udf``,
+``mapInArrow``, ``applyInArrow``), with its batch glue taken from
+``kernels`` — shingles + MinHash signatures, SimHash, block cosine
+top-k, PQ training/assignment/lookup tables, FFD packing, zlib
+compression ratio and the multimodal stubs.
 
 Scale design notes (local[32] tests ≠ the target; a 1000-executor
 cluster reading 100 TB is):
@@ -28,7 +33,7 @@ cluster reading 100 TB is):
   is a shuffle on (band_id, band_hash) whose fan-in is bounded by
   collision rate, and the exact-Jaccard verify only touches candidate
   pairs. All-pairs O(n²) appears solely in the DuckDB *oracle*.
-- Brute-force cosine top-k is quadratic by definition — it is the
+- Exact cosine top-k is quadratic by definition — it is the
   *correctness baseline*; ``sim_ann_ivf`` shows the bucketed plan
   (assign to nearest centroid, search within bucket) that replaces it
   at scale, where centroids come from a sampled k-means fit and the
@@ -40,11 +45,12 @@ cluster reading 100 TB is):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import functions as E
+from . import kernels as K
 
 # ---------------------------------------------------------------------------
 # Shared text primitives (engine-parity critical: every formula here has an
@@ -145,7 +151,7 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
     shingles (XOR of distinct rotations), distinct them, and fold the
     128-seed minimum (g_i = min over shingles of
     ``_mix64(shingle ^ seed_i)`` — an independent-ish permutation per
-    slot).  Why a Pandas UDF: the per-element Column/HOF
+    slot).  Why a Python kernel: the per-element Column/HOF
     version of this kernel is interpreted (never codegen'd) and
     measured ~5 s for 5 000 × ~500-token docs at sf0.1, plus another
     ~3 s for a JVM ``transform(w, xxhash64)`` token-hash pass; this
@@ -172,7 +178,7 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
     rots = [(1 + 21 * j) % 64 for j in range(k)]
     fnv = np.uint64(1099511628211)
 
-    @F.pandas_udf(
+    @F.arrow_udf(
         StructType(
             [
                 StructField("shingles", ArrayType(LongType())),
@@ -180,10 +186,11 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
             ]
         )
     )
-    def _kernel(texts: pd.Series) -> pd.DataFrame:
+    def _kernel(texts: pa.Array) -> pa.Array:
         tok_lists = [
             ("" if t is None else t).lower().encode("utf-8").split(b" ")
-            for t in texts  # null text == empty text (no shingles emitted)
+            # null text == empty text (no shingles emitted)
+            for t in texts.to_pylist()
         ]
         counts = np.fromiter(
             (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
@@ -251,23 +258,22 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
                 sig_mat[:, s] = np.minimum.reduceat(
                     _mix64(gs_u ^ seeds[s]), doc_starts
                 )
-        sh_out, sig_out = [], []
-        row = 0
-        for i in range(ndocs):
-            if u_counts[i] == 0:
-                sh_out.append(None)
-                sig_out.append(None)
-                continue
-            sh_out.append(gs_u[u_offs[i] : u_offs[i + 1]].view(np.int64))
-            if with_sig:
-                sig_out.append(sig_mat[row].view(np.int64))
-                row += 1
-            else:
-                # shingles-only callers (the exact-Jaccard path) skip
-                # the n_shingles×128 fold — the kernel's heaviest op —
-                # which Catalyst cannot prune through the UDF boundary.
-                sig_out.append(None)
-        return pd.DataFrame({"shingles": sh_out, "sig": sig_out})
+        valid = u_counts > 0
+        shingles = K.list_array(gs_u.view(np.int64), u_counts, valid)
+        if with_sig and len(gs_u):
+            sig = K.list_array(
+                sig_mat.ravel().view(np.int64),
+                np.where(valid, MINHASH_N, 0),
+                valid,
+            )
+        else:
+            # shingles-only callers (the exact-Jaccard path) skip the
+            # n_shingles×128 fold — the kernel's heaviest op — which
+            # Catalyst cannot prune through the UDF boundary.
+            sig = pa.nulls(ndocs, pa.list_(pa.int64()))
+        return pa.StructArray.from_arrays(
+            [shingles, sig], names=["shingles", "sig"]
+        )
 
     # Non-deterministic marking (it IS deterministic — this only gates
     # the optimizer): every caller filters on the kernel output
@@ -285,7 +291,7 @@ def _plan_with_real_stats(df: DataFrame) -> DataFrame:
     """Eagerly materialize a persisted kernel-stage frame so Catalyst
     plans every downstream join against the cache's TRUE size.
 
-    Catalyst estimates an Arrow/pandas kernel's output size from its
+    Catalyst estimates a Python kernel's output size from its
     INPUT columns' pruned widths — it cannot see the kernel's
     expansion factor (a shingle+signature struct is ~30× the source
     text column; measured at sf10: estimate 10.7 MiB, true cached
@@ -304,27 +310,24 @@ def _plan_with_real_stats(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
-    """Near-duplicate pairs (a_id < b_id, jaccard >= threshold).
-
-    Plan shape at scale: narrow shingle+signature projection → explode
-    to 64 (band, hash-pair) rows per doc → shuffle on the band key
-    (candidate generation; skew-safe because identical bands mean
-    near-identical docs) → distinct candidate pairs → join back the
-    two shingle sets → exact Jaccard filter. No stage is all-pairs.
-
-    The shingle+signature projection is a three-consumer intermediate
-    (band explode + both sides of the verify join); cache it rather
-    than recompute the tokenize+hash+kernel scan per consumer
+def shingle_table(
+    docs: DataFrame, k: int = 3, with_sig: bool = True
+) -> DataFrame:
+    """Persisted ``(doc_id, shingles[, sig])`` of every doc with at
+    least ``k`` tokens — the shingle+signature stage shared by the
+    near-dup builders, each of which reads it from several consumers
     (MEMORY_AND_DISK so a 100 TB run spills instead of evicting
     mid-plan).  All per-doc math runs in one Arrow/numpy kernel
-    (``_shingles_and_sig``); docs with < 3 tokens come back NULL and
-    are dropped, matching the oracle's ``len(w) >= 3`` filter.
-    """
+    (``_shingles_and_sig``); docs with < ``k`` tokens come back NULL
+    and are dropped, matching the oracles' ``len(w) >= k`` filter."""
     from pyspark import StorageLevel
 
     n_cores = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (
+    ss = _shingles_and_sig(k, with_sig=with_sig)("text").alias("ss")
+    out = [F.col("ss.shingles").alias("shingles")]
+    if with_sig:
+        out.append(F.col("ss.sig").alias("sig"))
+    return (
         # Spread the kernel across cores even when the source arrives
         # as few input splits (a local parquet file is ONE split → one
         # task): shuffling the narrow (doc_id, text) projection is
@@ -333,23 +336,21 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         # exchange, never a bottleneck.
         docs.select("doc_id", "text")
         .repartition(n_cores)
-        .select("doc_id", _shingles_and_sig(3)("text").alias("ss"))
+        .select("doc_id", ss)
         .filter(F.col("ss.shingles").isNotNull())
-        .select(
-            "doc_id",
-            F.col("ss.shingles").alias("shingles"),
-            F.col("ss.sig").alias("sig"),
-        )
+        .select("doc_id", *out)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sh = _plan_with_real_stats(sh)
-    sig = sh.select("doc_id", "sig")
-    # Band explode as ONE small HOF expression instead of an unrolled
-    # 64-struct array literal: same rows, but a plan node of constant
-    # size — the unrolled form made Catalyst/codegen chew a 192-field
-    # expression tree on every compile.  64 interpreted elements per
-    # row is noise next to the shuffle that follows.
-    bands = sig.select(
+
+
+def _lsh_bands(sh: DataFrame) -> DataFrame:
+    """``(doc_id, band, h0, h1)``: one row per LSH band of each
+    signature.  One small HOF expression instead of an unrolled
+    64-struct array literal: same rows, but a plan node of constant
+    size — the unrolled form made Catalyst/codegen chew a 192-field
+    expression tree on every compile.  64 interpreted elements per row
+    is noise next to the shuffle that follows."""
+    return sh.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -366,6 +367,23 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "bk.*")
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """Near-duplicate pairs (a_id < b_id, jaccard >= threshold).
+
+    Plan shape at scale: narrow shingle+signature projection → explode
+    to 64 (band, hash-pair) rows per doc → shuffle on the band key
+    (candidate generation; skew-safe because identical bands mean
+    near-identical docs) → distinct candidate pairs → join back the
+    two shingle sets → exact Jaccard filter. No stage is all-pairs.
+
+    The shingle+signature table (``shingle_table``) is a
+    three-consumer intermediate: band explode + both sides of the
+    verify join.
+    """
+    sh = _plan_with_real_stats(shingle_table(docs))
+    bands = _lsh_bands(sh)
     band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
     left = bands.alias("l")
     right = bands.alias("r")
@@ -435,23 +453,13 @@ def ngram_jaccard_pairs(
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    n_cores = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        docs.select("doc_id", "text")
-        .repartition(n_cores)
-        .select(
-            "doc_id",
-            _shingles_and_sig(k, with_sig=False)("text").alias("ss"),
-        )
-        .filter(F.col("ss.shingles").isNotNull())
-        .select("doc_id", F.col("ss.shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sh = _plan_with_real_stats(sh)
+    sh = _plan_with_real_stats(shingle_table(docs, k, with_sig=False))
     # Gram set size rides along from the array (free — no count
     # aggregation or window needed for |A|).
     grams = sh.select(
-        "doc_id", F.size("s").alias("n"), F.explode("s").alias("g")
+        "doc_id",
+        F.size("shingles").alias("n"),
+        F.explode("shingles").alias("g"),
     )
     dfreq = grams.groupBy("g").agg(F.count("*").alias("df"))
     # Rank each doc's grams under the PPJoin order with ONE window pass
@@ -506,8 +514,12 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
+    a = sh.select(
+        F.col("doc_id").alias("a_id"), F.col("shingles").alias("sa")
+    )
+    b = sh.select(
+        F.col("doc_id").alias("b_id"), F.col("shingles").alias("sb")
+    )
     jac = F.size(F.array_intersect("sa", "sb")) / F.size(
         F.array_union("sa", "sb")
     )
@@ -534,7 +546,7 @@ def simhash60_kernel():
     hash bit-for-bit, so the oracle hash-matches; 60 bits because 15
     hex digits fit a signed long.
 
-    Why a Pandas UDF: the per-bit Column/HOF formulation evaluates 60
+    Why a Python kernel: the per-bit Column/HOF formulation evaluates 60
     interpreted ``aggregate()`` chains per row (never codegen'd) and
     measured ~11 s for 5 000 docs at sf0.1; this kernel runs the same
     math as one numpy bit-matrix per doc plus a per-batch memoized
@@ -549,11 +561,11 @@ def simhash60_kernel():
 
     shifts = np.arange(60, dtype=np.uint64)
 
-    @F.pandas_udf(LongType())
-    def _kernel(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def _kernel(texts: pa.Array) -> pa.Array:
         cache: dict[bytes, int] = {}
         out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
+        for i, t in enumerate(texts.to_pylist()):
             toks = set(
                 ("" if t is None else t).lower().encode("utf-8").split(b" ")
             )
@@ -567,7 +579,7 @@ def simhash60_kernel():
             bits = (hs[:, None] >> shifts[None, :]) & np.uint64(1)
             votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
             out[i] = int(((votes > 0).astype(np.uint64) << shifts).sum())
-        return pd.Series(out)
+        return pa.array(out)
 
     return _kernel
 
@@ -689,11 +701,10 @@ def assign_nearest_cosine(e: DataFrame, cent: DataFrame) -> DataFrame:
 
 
 def _block_topk_fn(k: int):
-    """Per-block cosine top-``k`` kernel for the cogroup block layouts
-    (``topk_cosine_blocked`` / ``bucketed_topk_cosine``): dense numpy
-    ``Q @ M.T`` over one (query-chunk, index-shard) block, per-query
-    top-k candidates by (score DESC, neighbor_id ASC) with NaN scores
-    ordered LAST and emitted as NULL.
+    """Per-block cosine top-``k`` kernel for ``bucketed_topk_cosine``:
+    dense numpy ``Q @ M.T`` over one (query-chunk, index-shard) block,
+    per-query top-k candidates by (score DESC, neighbor_id ASC) with
+    NaN scores ordered LAST and emitted as NULL.
 
     The per-block lexsort applies the SAME total order as the global
     fold window (reals DESC, then NaN/NULL by ascending neighbor_id —
@@ -701,51 +712,40 @@ def _block_topk_fn(k: int):
     the id-ascending secondary among them), so the union of per-block
     top-ks is a superset of the global top-k INCLUDING the
     corrupt-vector NULL semantics."""
-    import numpy as np
-    import pandas as pd
 
-    def _block_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"vec_id": pd.Series(dtype="int64"),
-             "neighbor_id": pd.Series(dtype="int64"),
-             "c": pd.Series(dtype="float64")}
-        )
-        if left.empty or right.empty:
-            return empty
-        q = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-        m = np.stack(right["embedding"].to_numpy()).astype(np.float64)
+    def _block_topk(left: pa.Table, right: pa.Table) -> list:
+        if not left.num_rows or not right.num_rows:
+            return [[], [], []]
+        q = K.list_matrix(left.column("embedding"), np.float64)
+        m = K.list_matrix(right.column("embedding"), np.float64)
+        q_ids = left.column("vec_id").to_numpy()
+        i_ids = right.column("vec_id").to_numpy()
         q_norm = np.sqrt((q * q).sum(axis=1))
         m_norm = np.sqrt((m * m).sum(axis=1))
         with np.errstate(invalid="ignore"):  # zero-norm 0/0 → NaN→NULL below
             scores = (q @ m.T) / (q_norm[:, None] * m_norm[None, :])
-        q_ids = left["vec_id"].to_numpy()
-        i_ids = right["vec_id"].to_numpy()
-        out: dict[str, list] = {"vec_id": [], "neighbor_id": [], "c": []}
-        for qi, row in zip(q_ids, scores):
-            mask = i_ids != qi  # exclude self
-            cand_ids, cand = i_ids[mask], row[mask]
-            top = np.lexsort((cand_ids, -cand))[:k]  # desc score, id asc
-            out["vec_id"].extend([qi] * len(top))
-            out["neighbor_id"].extend(cand_ids[top])
-            out["c"].extend(cand[top])
+        # one lexsort per block: self pairs last, then desc score (NaN
+        # last), then id asc — self is dropped from the first k below
+        is_self = i_ids[None, :] == q_ids[:, None]
+        ids = np.broadcast_to(i_ids, scores.shape)
+        top = np.lexsort((ids, -scores, is_self), axis=1)[:, :k]
+        keep = ~np.take_along_axis(is_self, top, axis=1)
+        c = np.take_along_axis(scores, top, axis=1)[keep]
         # A zero-norm (corrupt) vector makes the 0/0 above a NaN — but
         # Spark sorts NaN FIRST under desc (NaN > +Inf) while the
         # DuckDB oracle's NULL-on-zero-divide sorts last, so a corrupt
         # vector would silently WIN the global ranking.  Emit NULL at
-        # the source (nullable Float64 → Arrow null) so the window
-        # ranks it DESC-NULLS-LAST like the oracle; the lexsort above
-        # already places NaN last, consistently.  (Found by the
-        # `zerovec` random-corpus variant.  NOT fixable with a nanvl
-        # projection on the cogroup output: a Project directly atop
-        # FlatMapCoGroupsInPandas mis-prunes the right group's input
-        # columns down to the grouping key in Spark 4.1.)
-        cvals = np.asarray(out["c"], dtype="float64")
-        carr = pd.array(cvals, dtype="Float64")
-        carr[np.isnan(cvals)] = pd.NA
-        return pd.DataFrame(
-            {"vec_id": out["vec_id"], "neighbor_id": out["neighbor_id"],
-             "c": carr}
-        )
+        # the source so the window ranks it DESC-NULLS-LAST like the
+        # oracle; the lexsort above already places NaN last,
+        # consistently.  (Found by the `zerovec` random-corpus
+        # variant.  Not a nanvl projection on the cogroup output: a
+        # Project directly atop the cogroup mis-prunes the right
+        # group's input columns down to the grouping key in Spark 4.1.)
+        return [
+            np.broadcast_to(q_ids[:, None], top.shape)[keep],
+            i_ids[top][keep],
+            pa.array(c, mask=np.isnan(c)),
+        ]
 
     return _block_topk
 
@@ -778,31 +778,46 @@ def bucketed_topk_cosine(
     products: ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked by
     (cosine DESC NULLS LAST, neighbor_id), cosine rounded to 1e-6
     AFTER the global rank — the IVF/ANN in-bucket search shared by
-    ``sim_ann_ivf`` and ``sim_ann_ivf_trained``.
+    ``sim_ann_ivf`` and ``sim_ann_ivf_trained``, and the whole-corpus
+    search of ``topk_cosine_blocked`` (one constant bucket).
 
-    Round-13 shape (guide §4.2, §8): the old form self-joined the
-    bucket (Σ|cell|² pair ROWS each carrying two 64-float vectors),
-    scored every pair with the interpreted ``zip_with`` cosine fold,
-    and ranked with a window over all pairs.  Here each bucket is
-    sub-blocked exactly like ``topk_cosine_blocked`` — cogroup keys
-    ``(bucket, qc, shard)``, query side replicated ×shards, index side
-    ×chunks — one dense numpy matmul per block, per-query top-k folded
-    through one window over ≤ k×shards rows per query.  Vector bytes
-    cross the exchange once per replication constant, never per pair.
-    Scoring matches the sequential-fold oracle inside the 1e-6
-    rounding grid (the ``topk_cosine_blocked`` precedent, hash-green
-    since round 10), and the NaN→NULL corrupt-vector semantics are the
-    kernel's (see ``_block_topk_fn``)."""
+    Block layout, with NO driver materialization anywhere: within each
+    bucket the index side is hash-sharded on ``vec_id % index_shards``,
+    the query side on ``vec_id % query_chunks``, each side replicated
+    across the other's blocks (query rows ×shards, index rows ×chunks
+    — the standard block nested-loop layout), and every
+    ``(bucket, chunk, shard)`` block meets in one cogroup
+    ``applyInArrow`` task that runs a dense numpy ``Q @ M.T``
+    (``_block_topk_fn``).  Per-block per-query top-k candidates then
+    fold into the global top-k through one window over ≤ k×shards rows
+    per query — correct because a global top-k is always a subset of
+    the union of per-shard top-ks.  Vector bytes cross the exchange
+    once per replication constant, never per pair, and both
+    replication factors are plan constants, so Catalyst sizes the
+    shuffle correctly.
+
+    Scoring mirrors the DuckDB oracle — ``dot / (norm_a · norm_b)``
+    with float→double promotion before the multiply, then
+    round_to(…, 6) AFTER the global rank — so value hashes match
+    (matmul's blocked summation differs from a sequential fold only at
+    ~1e-16, far inside the 1e-6 rounding grid; rank ties break on
+    neighbor_id exactly like the oracle's ``ORDER BY c DESC,
+    neighbor_id``).  The NaN→NULL corrupt-vector semantics are the
+    kernel's."""
     from pyspark.sql import Window
 
-    # Key-type discipline copied verbatim from topk_cosine_blocked:
-    # pmod(bigint,int) is BIGINT, explode(sequence(int,int)) is INT,
-    # and HashPartitioning is type-sensitive — mismatched key types
-    # scatter equal keys to different partitions and blocks silently
-    # never pair (latent at small SF; pinned by test_pipeline).
-    # Each side projects the bucket alias FRESH from ``ea`` (a shared
-    # aliased attribute on both cogroup sides trips the ambiguous-
-    # self-join check).
+    # The cogroup keys MUST have identical types on both sides:
+    # pmod(bigint, int) is BIGINT while explode(sequence(int, int)) is
+    # INT, and Spark's HashPartitioning hash is TYPE-SENSITIVE
+    # (murmur3 of 2L != murmur3 of 2) — with mismatched key types the
+    # two shuffles scatter equal keys to DIFFERENT partitions and
+    # blocks silently never pair.  The bug is LATENT at small SF:
+    # AQE coalesces small shuffles to few partitions where the
+    # sort-merge still pairs them, then detonates as data grows (6/16
+    # blocks at sf0.1, 0/16 at sf1 → zero output).  Pinned by
+    # test_pipeline.  Each side projects the bucket alias FRESH from
+    # ``ea`` (a shared aliased attribute on both cogroup sides trips
+    # the ambiguous-self-join check).
     qs = ea.select(
         F.col(bucket).alias("__b"),
         F.pmod("vec_id", F.lit(query_chunks)).cast("int").alias("qc"),
@@ -821,12 +836,12 @@ def bucketed_topk_cosine(
         "vec_id",
         "embedding",
     )
-    partial = (
-        qs.groupBy("__b", "qc", "shard")
-        .cogroup(ix.groupBy("__b", "qc", "shard"))
-        .applyInPandas(
-            _block_topk_fn(k), schema="vec_id long, neighbor_id long, c double"
-        )
+    partial = K.apply_in_arrow(
+        qs.groupBy("__b", "qc", "shard").cogroup(
+            ix.groupBy("__b", "qc", "shard")
+        ),
+        _block_topk_fn(k),
+        "vec_id long, neighbor_id long, c double",
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("c").desc(), F.col("neighbor_id")
@@ -849,89 +864,27 @@ def topk_cosine_blocked(
     index_shards: int = 4,
     query_chunks: int = 4,
 ) -> DataFrame:
-    """Brute-force cosine top-k as a distributed block matrix product.
+    """Exact cosine top-k over the whole corpus as a distributed block
+    matrix product: ``bucketed_topk_cosine`` over one constant bucket.
 
-    The exact-kNN baseline with NO driver materialization anywhere:
-    the index side is hash-sharded on ``vec_id % index_shards``, the
-    query side on ``vec_id % query_chunks``, each side replicated
-    across the other's blocks (query rows ×S, index rows ×Q — the
-    standard block nested-loop layout), and every (chunk, shard) block
-    meets in one ``cogroup().applyInPandas`` task that runs a dense
-    numpy ``Q @ M.T``.  Per-block per-query top-k candidates then fold
-    into the global top-k through one window — correct because a
-    global top-k is always a subset of the union of per-shard top-ks.
-
-    At 100 TB this replaces the old broadcast-index design (driver
+    At 100 TB this replaces a broadcast-index design (driver
     ``collect()`` + ~30 GB executor ceiling): pick ``index_shards`` so
     one shard's dense matrix fits a task (shard size ≈ N·d·8/S bytes)
     and ``query_chunks`` for parallelism; data movement is
     Q·S + I·Qc rows — the provably minimal replication for an exact
-    all-pairs scan without a shared index.  Both replication factors
-    are plan constants, so Catalyst sizes the shuffle correctly.
-
-    Scoring mirrors the DuckDB oracle — ``dot / (norm_a · norm_b)``
-    with float→double promotion before the multiply, then
-    round_to(…, 6) AFTER the global rank — so value hashes match
-    (matmul's blocked summation differs from a sequential fold only at
-    ~1e-16, far inside the 1e-6 rounding grid; rank ties break on
-    neighbor_id exactly like the oracle's ``ORDER BY c DESC,
-    neighbor_id``).
+    all-pairs scan without a shared index.
     """
-    # The cogroup keys MUST have identical types on both sides:
-    # pmod(bigint, int) is BIGINT while explode(sequence(int, int)) is
-    # INT, and Spark's HashPartitioning hash is TYPE-SENSITIVE
-    # (murmur3 of 2L != murmur3 of 2) — with mismatched key types the
-    # two shuffles scatter equal keys to DIFFERENT partitions and
-    # blocks silently never pair.  The bug is LATENT at small SF:
-    # AQE coalesces small shuffles to few partitions where the
-    # sort-merge still pairs them (all 16 blocks pair at sf0.01 —
-    # driver-green), then detonates as data grows (6/16 blocks at
-    # sf0.1, 0/16 at sf1 → zero output).  Found by the round-10
-    # decade run; pinned by test_pipeline.
-    base = embs.select("vec_id", "embedding")
-    qs = base.select(
-        F.pmod("vec_id", F.lit(query_chunks)).cast("int").alias("qc"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(index_shards - 1))
-        ).alias("shard"),
-        "vec_id",
-        "embedding",
-    )
-    ix = base.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(query_chunks - 1))
-        ).alias("qc"),
-        F.pmod("vec_id", F.lit(index_shards)).cast("int").alias("shard"),
-        "vec_id",
-        "embedding",
-    )
-
-    partial = (
-        qs.groupBy("qc", "shard")
-        .cogroup(ix.groupBy("qc", "shard"))
-        .applyInPandas(
-            _block_topk_fn(k), schema="vec_id long, neighbor_id long, c double"
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("c").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "vec_id",
-            "rnk",
-            "neighbor_id",
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
+    return bucketed_topk_cosine(
+        embs.select("vec_id", "embedding", F.lit(0).alias("__all")),
+        k,
+        index_shards,
+        query_chunks,
+        bucket="__all",
     )
 
 
 # ---------------------------------------------------------------------------
-# Multimodal decode stub (the one deliberate non-JVM operator)
+# Multimodal decode stubs
 # ---------------------------------------------------------------------------
 
 MULTIMODAL_SCHEMA = (
@@ -940,8 +893,41 @@ MULTIMODAL_SCHEMA = (
 )
 
 
+def _payloads(b: pa.RecordBatch):
+    """``(rows, n_bytes, flat, start)`` of a ``payload`` batch: the rows
+    that carry a payload (missing media: skipped), each payload's byte
+    count, all payload bytes concatenated as uint8, and each row's
+    start offset into them."""
+    b = b.filter(b.column("payload").is_valid())
+    raw = b.column("payload").to_pylist()
+    n = np.fromiter(map(len, raw), np.int64, len(raw))
+    return b, n, np.frombuffer(b"".join(raw), np.uint8), np.cumsum(n) - n
+
+
+def _fake_decode(n_bytes: np.ndarray, modality: pa.Array):
+    """STUB decode: ``(width, height, n_frames)`` derived from payload
+    size only — the seam where a real deployment calls
+    PIL/torchaudio/ffmpeg."""
+    import pyarrow.compute as pc
+
+    video = pc.fill_null(pc.equal(modality, "video"), False)
+    return (
+        64 + n_bytes % 577,
+        64 + (n_bytes * 31) % 353,
+        np.where(video.to_numpy(zero_copy_only=False), 1 + n_bytes % 96, 1),
+    )
+
+
+def _repeat_rows(per_row: np.ndarray):
+    """``(row, pos)`` for a 1→N fan-out: the source row of every output
+    row and its 0-based position within that row's run."""
+    row = np.repeat(np.arange(len(per_row)), per_row)
+    starts = np.repeat(np.cumsum(per_row) - per_row, per_row)
+    return row, np.arange(len(row)) - starts
+
+
 def decode_multimodal(df: DataFrame) -> DataFrame:
-    """Arrow-batched decode of opaque binary payloads via mapInPandas.
+    """Arrow-batched decode of opaque binary payloads.
 
     STUB: the container has no image/audio codecs, so the decode is a
     deterministic fake — real deployments replace ``_fake_decode``
@@ -951,27 +937,16 @@ def decode_multimodal(df: DataFrame) -> DataFrame:
     """
 
     def _decode(batches):
-        import numpy as np
-        import pandas as pd
+        for b in batches:
+            b, n, _, _ = _payloads(b)
+            yield [
+                b.column("doc_id"),
+                b.column("modality"),
+                n,
+                *_fake_decode(n, b.column("modality")),
+            ]
 
-        for pdf in batches:
-            pdf = pdf[pdf["payload"].notna()]  # missing media: skip
-            n_bytes = pdf["payload"].map(len)
-            # _fake_decode: dimensions derived from payload size only.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": n_bytes,
-                    "width": 64 + n_bytes % 577,
-                    "height": 64 + (n_bytes * 31) % 353,
-                    "n_frames": np.where(
-                        pdf["modality"] == "video", 1 + n_bytes % 96, 1
-                    ),
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=MULTIMODAL_SCHEMA)
+    return K.map_in_arrow(df, _decode, MULTIMODAL_SCHEMA)
 
 
 FRAME_SCHEMA = (
@@ -994,7 +969,7 @@ def sample_frames(df: DataFrame, stride: int = 7, box: int = 224) -> DataFrame:
     STUB boundary, same as ``decode_multimodal``: the per-frame
     checksum is where a real deployment calls ffmpeg/PIL per slice.
     The Spark contract is the real part — one input row fans out to a
-    variable number of output rows through ``mapInPandas`` (an Arrow
+    variable number of output rows through ``mapInArrow`` (an Arrow
     batch iterator may yield MORE rows than it receives), payload
     bytes never leave the executor, and the output is a flat typed
     frame table ready for a downstream feature join.  At 100 TB this
@@ -1002,38 +977,28 @@ def sample_frames(df: DataFrame, stride: int = 7, box: int = 224) -> DataFrame:
     """
 
     def _sample(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "modality", "frame_idx", "frame_offset",
-                "frame_len", "frame_checksum", "resized_w", "resized_h",
-            )}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if payload is None:  # missing media: skip
-                    continue
-                raw = np.frombuffer(payload, dtype=np.uint8)
-                n_bytes = len(raw)
-                n_frames = 1 + n_bytes % 96 if modality == "video" else 1
-                w = 64 + n_bytes % 577
-                h = 64 + (n_bytes * 31) % 353
-                scale_den = max(w, h)
-                rw = w * box // scale_den
-                rh = h * box // scale_den
-                for idx in range(0, n_frames, stride):
-                    lo = idx * n_bytes // n_frames
-                    hi = (idx + 1) * n_bytes // n_frames
-                    out["doc_id"].append(doc_id)
-                    out["modality"].append(modality)
-                    out["frame_idx"].append(idx)
-                    out["frame_offset"].append(lo)
-                    out["frame_len"].append(hi - lo)
-                    out["frame_checksum"].append(int(raw[lo:hi].sum()))
-                    out["resized_w"].append(rw)
-                    out["resized_h"].append(rh)
-            yield pd.DataFrame(out)
+        for b in batches:
+            b, n, flat, start = _payloads(b)
+            w, h, n_frames = _fake_decode(n, b.column("modality"))
+            den = np.maximum(w, h)
+            row, pos = _repeat_rows((n_frames + stride - 1) // stride)
+            idx = pos * stride
+            lo = idx * n[row] // n_frames[row]
+            hi = (idx + 1) * n[row] // n_frames[row]
+            # frame checksums as differences of one prefix sum
+            csum = np.concatenate(([0], np.cumsum(flat, dtype=np.int64)))
+            yield [
+                b.column("doc_id").take(row),
+                b.column("modality").take(row),
+                idx,
+                lo,
+                hi - lo,
+                csum[start[row] + hi] - csum[start[row] + lo],
+                (w * box // den)[row],
+                (h * box // den)[row],
+            ]
 
-    return df.mapInPandas(_sample, schema=FRAME_SCHEMA)
+    return K.map_in_arrow(df, _sample, FRAME_SCHEMA)
 
 
 CHUNK_SCHEMA = (
@@ -1059,29 +1024,27 @@ def chunk_audio(df: DataFrame, chunk: int = 512) -> DataFrame:
     """
 
     def _chunks(batches):
-        cols = (
-            "doc_id", "chunk_idx", "chunk_off", "chunk_len",
-            "checksum", "energy", "peak",
-        )
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # missing media: skip
-                    continue
-                raw = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                n = len(raw)
-                for ci, lo in enumerate(range(0, n, chunk)):
-                    seg = raw[lo : lo + chunk]
-                    out["doc_id"].append(doc_id)
-                    out["chunk_idx"].append(ci)
-                    out["chunk_off"].append(lo)
-                    out["chunk_len"].append(len(seg))
-                    out["checksum"].append(int(seg.sum()))
-                    out["energy"].append(int((seg * seg).sum()))
-                    out["peak"].append(int(seg.max()))
-            yield pd.DataFrame(out)
+        for b in batches:
+            b, n, flat, start = _payloads(b)
+            row, ci = _repeat_rows((n + chunk - 1) // chunk)
+            if not len(row):
+                continue
+            off = ci * chunk
+            # the windows tile ``flat`` exactly (empty payloads have
+            # none), so each reduceat segment is one window
+            seg = start[row] + off
+            v = flat.astype(np.int64)
+            yield [
+                b.column("doc_id").take(row),
+                ci,
+                off,
+                np.minimum(chunk, n[row] - off),
+                np.add.reduceat(v, seg),
+                np.add.reduceat(v * v, seg),
+                np.maximum.reduceat(v, seg),
+            ]
 
-    return df.mapInPandas(_chunks, schema=CHUNK_SCHEMA)
+    return K.map_in_arrow(df, _chunks, CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1440,19 +1403,14 @@ def _pq_train(q: DataFrame, spec: list) -> list:
         live = [m for m, (_, _, _, it) in enumerate(spec) if rnd < it]
         bc = sc.broadcast([(m, slices[m], cbs[m]) for m in live])
 
-        def _partials(it_pdf, _bc=bc):
-            import numpy as np
-            import pandas as pd
-
+        def _partials(batches, _bc=bc):
             parts = _bc.value
             S = [np.zeros(cb[1].shape, np.int64) for (_, _, cb) in parts]
             N = [
                 np.zeros(cb[1].shape[0], np.int64) for (_, _, cb) in parts
             ]
-            for pdf in it_pdf:
-                if not len(pdf):
-                    continue
-                Q = np.array(pdf["qv"].to_list(), dtype=np.int64)
+            for b in batches:
+                Q = K.list_matrix(b.column("qv"), np.int64)
                 for i, (_, (lo, hi), (ids, C)) in enumerate(parts):
                     if len(ids) == 0:
                         continue
@@ -1470,21 +1428,14 @@ def _pq_train(q: DataFrame, spec: list) -> list:
                     ss.append(S[i][j])
                     ns.append(np.full(d_m, N[i][j], np.int64))
             if ms:
-                yield pd.DataFrame(
-                    {
-                        "m": np.concatenate(ms),
-                        "ci": np.concatenate(cis),
-                        "pos": np.concatenate(poss),
-                        "s": np.concatenate(ss),
-                        "n": np.concatenate(ns),
-                    }
-                )
+                yield [np.concatenate(c) for c in (ms, cis, poss, ss, ns)]
 
         try:
             agg = (
-                q.select("qv")
-                .mapInPandas(
-                    _partials, "m int, ci long, pos int, s long, n long"
+                K.map_in_arrow(
+                    q.select("qv"),
+                    _partials,
+                    "m int, ci long, pos int, s long, n long",
                 )
                 .groupBy("m", "ci", "pos")
                 .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
@@ -1546,44 +1497,29 @@ def _pq_assign(
         [(m, lo, hi, p, cbs[i]) for i, (m, lo, hi, p) in enumerate(spec)]
     )
 
-    def _assign(it_pdf, _bc=bc):
-        import numpy as np
-        import pandas as pd
-
-        parts = _bc.value
-        for pdf in it_pdf:
-            if not len(pdf):
-                continue
-            Q = np.array(pdf["qv"].to_list(), dtype=np.int64)
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    def _assign(batches, _bc=bc):
+        parts = [p for p in _bc.value if len(p[4][0])]
+        for b in batches:
+            Q = K.list_matrix(b.column("qv"), np.int64)
+            vids = b.column("vec_id").to_numpy()
             n = len(vids)
-            frames = []
+            outs = []
             for m, lo, hi, nprobe, (ids, C) in parts:
-                k = len(ids)
-                if k == 0:
-                    continue
                 d = _np_sq_dists(Q[:, lo:hi], C)
-                p = min(nprobe, k)
+                p = min(nprobe, len(ids))
                 order = np.argsort(d, axis=1, kind="stable")[:, :p]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vids, p),
-                            "subspace": np.full(n * p, m, np.int64),
-                            "cent_id": ids[order].ravel(),
-                            "dist": np.take_along_axis(
-                                d, order, axis=1
-                            ).ravel(),
-                            "probe_rank": np.tile(
-                                np.arange(1, p + 1, dtype=np.int32), n
-                            ),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+                outs.append((
+                    np.repeat(vids, p),
+                    np.full(n * p, m, np.int64),
+                    ids[order].ravel(),
+                    np.take_along_axis(d, order, axis=1).ravel(),
+                    np.tile(np.arange(1, p + 1, dtype=np.int32), n),
+                ))
+            if outs:
+                yield [np.concatenate(c) for c in zip(*outs)]
 
-    out = q.select("vec_id", "qv").mapInPandas(
+    out = K.map_in_arrow(
+        q.select("vec_id", "qv"),
         _assign,
         "vec_id long, subspace long, cent_id long, dist long, "
         "probe_rank int",
@@ -1608,76 +1544,36 @@ def _pq_lut_codes(q: DataFrame, cbs: list, slices: list) -> DataFrame:
     sc = q.sparkSession.sparkContext
     bc = sc.broadcast(list(zip(slices, cbs)))
 
-    def _lut(it_pdf, _bc=bc):
-        import numpy as np
-        import pandas as pd
-
+    def _lut(batches, _bc=bc):
         parts = _bc.value
         if any(len(ids) == 0 for _, (ids, _) in parts):
             # empty codebooks (empty corpus / no vec_id<k rows) carry
             # no distances: emit nothing, matching the historical
             # empty-LUT row set
             return
-        for pdf in it_pdf:
-            if not len(pdf):
-                continue
-            Q = np.array(pdf["qv"].to_list(), dtype=np.int64)
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            dists = []
-            codes = []
-            for (lo, hi), (ids, C) in parts:
-                d = _np_sq_dists(Q[:, lo:hi], C)
-                dists.append(d)
-                codes.append(d.argmin(axis=1))
-            code_mat = np.stack(codes, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": vids,
-                    "codes": [row.tolist() for row in code_mat],
-                    "luts": [
-                        [d[i].tolist() for d in dists]
-                        for i in range(len(vids))
-                    ],
-                }
+        widths = np.array([len(ids) for _, (ids, _) in parts])
+        for b in batches:
+            Q = K.list_matrix(b.column("qv"), np.int64)
+            n = len(Q)
+            dists = [
+                _np_sq_dists(Q[:, lo:hi], C) for (lo, hi), (_, C) in parts
+            ]
+            codes = np.stack([d.argmin(axis=1) for d in dists], axis=1)
+            # row i's LUT is [d_0[i], d_1[i], ...]: one row-major
+            # concatenation, M inner lists per row
+            luts = K.list_array(
+                np.concatenate(dists, axis=1).ravel(), np.tile(widths, n)
             )
+            yield [
+                b.column("vec_id"),
+                K.list_array(codes.ravel(), np.full(n, len(parts))),
+                K.list_array(luts, np.full(n, len(parts))),
+            ]
 
-    return q.select("vec_id", "qv").mapInPandas(
-        _lut, "vec_id long, codes array<long>, luts array<array<long>>"
-    )
-
-
-def _kmeans_assign(
-    q: DataFrame, cents_df: DataFrame, nprobe: int = 1
-) -> DataFrame:
-    """Each quantized vector's ``nprobe`` nearest codebook cells
-    (integer distance, cent_id tie-break): ``(vec_id, cent_id, dist,
-    probe_rank)``.
-
-    Round-13 shape: the codebook (k rows — model-sized, the same
-    payload it was already broadcast as) rides to the executors once
-    and the ranking is one vectorized numpy pass per batch
-    (``_pq_assign``) — MAP-ONLY, no fan-out, no window, no exchange.
-    The interpreted Catalyst higher-order-function fold this replaces
-    evaluated N·k·d lambdas per pass, which dominated the K=256
-    deployment stacks (guide §4.2)."""
-    cb = _np_codebook(
-        [(r["cent_id"], r["cvec"]) for r in cents_df.collect()]
-    )
-    return _pq_assign(q, [cb], [(0, 0, None, nprobe)])
-
-
-def _kmeans_train(q: DataFrame, k: int, iters: int) -> DataFrame:
-    """The Lloyd's loop over pre-quantized vectors: returns the
-    trained k-row ``(cent_id, cvec)`` codebook after ``iters`` rounds
-    from the deterministic first-``k`` init (``_pq_train`` on the
-    full-width slice — see its docstring for the per-round plan shape
-    and the exactness contract)."""
-    ids, C = _pq_train(q, [(0, None, k, iters)])[0]
-    rows = [
-        (int(cid), [int(x) for x in row]) for cid, row in zip(ids, C)
-    ]
-    return q.sparkSession.createDataFrame(
-        rows, "cent_id long, cvec array<long>"
+    return K.map_in_arrow(
+        q.select("vec_id", "qv"),
+        _lut,
+        "vec_id long, codes array<long>, luts array<array<long>>",
     )
 
 
@@ -1882,7 +1778,7 @@ def ffd_pack(
     (pack_token_budget's running-sum NEXT-fit can; first-fit backtracks
     into earlier bins).  The engine shape: documents are hashed into
     ``shards`` deterministic buckets (even md5 split — each shard's
-    token mass is ~total/shards), and ``applyInPandas`` runs the exact
+    token mass is ~total/shards), and ``applyInArrow`` runs the exact
     greedy per shard: sort by (tokens desc, doc_id), place each doc
     into the first bin with room, open a new bin otherwise.  At 100 TB
     the sequential region is one shard — sized by the shard count, not
@@ -1892,15 +1788,11 @@ def ffd_pack(
     partition count.
     """
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", "doc_id"], ascending=[False, True]
-        )
+    def _pack(t: pa.Table) -> list:
+        t = t.sort_by([("n_tokens", "descending"), ("doc_id", "ascending")])
         space: list[int] = []  # remaining capacity per open bin
-        out = []
-        for doc_id, shard, n in zip(
-            pdf["doc_id"], pdf["shard"], pdf["n_tokens"]
-        ):
+        bins = []
+        for n in t.column("n_tokens").to_pylist():
             placed = None
             for i, free in enumerate(space):
                 if n <= free:
@@ -1910,10 +1802,10 @@ def ffd_pack(
                 placed = len(space)
                 # an oversized doc gets its own (over-full) bin
                 space.append(max(capacity - n, 0))
-            out.append((int(doc_id), int(shard), placed, int(n)))
-        return pd.DataFrame(
-            out, columns=["doc_id", "shard", "bin_idx", "n_tokens"]
-        )
+            bins.append(placed)
+        return [
+            t.column("doc_id"), t.column("shard"), bins, t.column("n_tokens")
+        ]
 
     sized = docs.select(
         "doc_id",
@@ -1923,7 +1815,7 @@ def ffd_pack(
             F.size(ws_tokens(F.col("text"))).cast("long"), F.lit(0)
         ).alias("n_tokens"),
     )
-    return sized.groupBy("shard").applyInPandas(_pack, schema=PACK_SCHEMA)
+    return K.apply_in_arrow(sized.groupBy("shard"), _pack, PACK_SCHEMA)
 
 
 COMPRESS_SCHEMA = (
@@ -1944,24 +1836,25 @@ def compression_ratio(docs: DataFrame, level: int = 6) -> DataFrame:
     def _ratios(batches):
         import zlib
 
-        for pdf in batches:
-            raw = [t.encode("utf-8") for t in pdf["text"].fillna("")]
-            comp = [len(zlib.compress(b, level)) for b in raw]
-            n = [len(b) for b in raw]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n,
-                    "n_compressed": comp,
-                    "ratio_q4": [
-                        (c * 10000) // b if b else 0
-                        for c, b in zip(comp, n)
-                    ],
-                }
+        for b in batches:
+            # null text == empty text
+            raw = [
+                (t or "").encode("utf-8")
+                for t in b.column("text").to_pylist()
+            ]
+            n = np.fromiter(map(len, raw), np.int64, len(raw))
+            comp = np.fromiter(
+                (len(zlib.compress(r, level)) for r in raw), np.int64, len(raw)
             )
+            yield [
+                b.column("doc_id"),
+                n,
+                comp,
+                np.where(n > 0, comp * 10000 // np.maximum(n, 1), 0),
+            ]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        _ratios, schema=COMPRESS_SCHEMA
+    return K.map_in_arrow(
+        docs.select("doc_id", "text"), _ratios, COMPRESS_SCHEMA
     )
 
 
@@ -1989,53 +1882,14 @@ def minhash_lsh_pairs_incremental(
     the same ownership rule as sim_ann_lsh / dedup_containment; the
     bench/sweep/verify harnesses all do this.
     """
-    from pyspark import StorageLevel
-
-    n_cores = new_docs.sparkSession.sparkContext.defaultParallelism
-
-    def _sh(docs):
-        return _plan_with_real_stats(_sh_raw(docs))
-
-    def _sh_raw(docs):
-        return (
-            docs.select("doc_id", "text")
-            .repartition(n_cores)
-            .select("doc_id", _shingles_and_sig(3)("text").alias("ss"))
-            .filter(F.col("ss.shingles").isNotNull())
-            .select(
-                "doc_id",
-                F.col("ss.shingles").alias("shingles"),
-                F.col("ss.sig").alias("sig"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    def _bands(sh):
-        return sh.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        *[
-                            F.element_at(
-                                "sig", b * LSH_ROWS + r + 1
-                            ).alias(f"h{r}")
-                            for r in range(LSH_ROWS)
-                        ],
-                    ),
-                )
-            ).alias("bk"),
-        ).select("doc_id", "bk.*")
-
-    sh_new, sh_idx = _sh(new_docs), _sh(index_docs)
+    sh_new = _plan_with_real_stats(shingle_table(new_docs))
+    sh_idx = _plan_with_real_stats(shingle_table(index_docs))
     band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
     candidates = (
-        _bands(sh_new)
+        _lsh_bands(sh_new)
         .withColumnRenamed("doc_id", "new_id")
         .join(
-            _bands(sh_idx).withColumnRenamed("doc_id", "match_id"),
+            _lsh_bands(sh_idx).withColumnRenamed("doc_id", "match_id"),
             band_keys,
         )
         .select("new_id", "match_id")

@@ -689,7 +689,7 @@ def doc_fingerprint(spark, sf_dir):
 )
 def multimodal_meta(spark, sf_dir):
     """Multimodal plumbing: opaque binary payload + typed metadata,
-    decoded through an Arrow-batched mapInPandas stub.
+    decoded through an Arrow-batched mapInArrow stub.
 
     The payload is the utf-8 text bytes standing in for image/audio/
     video blobs; the decode stub derives dimensions deterministically
@@ -759,7 +759,7 @@ def multimodal_frame_sample(spark, sf_dir):
     the fake-decoded frame grid, aspect-preserving 224-box resize).
 
     One input row fans out to N output rows through the Arrow batch
-    iterator — the mapInPandas contract a real video pipeline needs;
+    iterator — the mapInArrow contract a real video pipeline needs;
     the byte checksum stands in for the per-frame codec call (the
     oracle expands chars to UTF-8 bytes — _utf8_bytes_sql — so the
     sum is byte-exact on multibyte corpora too).
@@ -1729,34 +1729,19 @@ def dedup_containment(spark, sf_dir):
     blocking in dedup literature).  Verification ships the two
     (distinct-gram) arrays per candidate and intersects them JVM-side.
 
-    Shingles come from the Arrow ``_shingles_and_sig`` kernel as
+    Shingles come from ``pipeline.shingle_table`` (the Arrow kernel) as
     64-bit HASHED grams (the interpreted ``word_shingles`` HOF was
     the query's hot spot at sf0.1) — df counts, blocking, and
     intersection sizes over hashed grams equal the oracle's textual
     grams up to ~n²/2^64 collisions, the same equivalence the
     minhash verify is driver-green on.
     """
-    from pyspark import StorageLevel
-
-    d = _docs(spark, sf_dir)
-    n_cores = spark.sparkContext.defaultParallelism
     # The shingle table feeds FIVE consumers (df counts, both sides of
-    # the candidate self-join, both sides of the verify join) — persist
-    # it once rather than re-shingling the corpus per branch (the same
-    # policy as the minhash/ngram builders; the sweep harness clears
-    # cache post-action).
-    sh = (
-        d.select("doc_id", "text")
-        .repartition(n_cores)
-        .select(
-            "doc_id",
-            P._shingles_and_sig(3, with_sig=False)("text").alias("ss"),
-        )
-        .filter(F.col("ss.shingles").isNotNull())
-        .select("doc_id", F.col("ss.shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    g = sh.select("doc_id", F.explode("s").alias("gram"))
+    # the candidate self-join, both sides of the verify join) — it is
+    # persisted once rather than re-shingled per branch (the sweep
+    # harness clears cache post-action).
+    sh = P.shingle_table(_docs(spark, sf_dir), with_sig=False)
+    g = sh.select("doc_id", F.explode("shingles").alias("gram"))
     df_c = g.groupBy("gram").agg(F.count("*").alias("dfc"))
     rare = g.join(df_c.filter(F.col("dfc") <= 10), "gram")
     a = rare.select(F.col("doc_id").alias("aid"), "gram")
@@ -1767,8 +1752,12 @@ def dedup_containment(spark, sf_dir):
         .select("aid", "bid")
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("aid"), F.col("s").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("bid"), F.col("s").alias("sb"))
+    sa = sh.select(
+        F.col("doc_id").alias("aid"), F.col("shingles").alias("sa")
+    )
+    sb = sh.select(
+        F.col("doc_id").alias("bid"), F.col("shingles").alias("sb")
+    )
     cont = F.size(F.array_intersect("sa", "sb")).cast("double") / F.least(
         F.size("sa"), F.size("sb")
     )
@@ -2159,7 +2148,7 @@ def multimodal_dedup_phash(spark, sf_dir):
     doc id per (modality, fingerprint) group.
 
     Real perceptual hashes (pHash DCT, chromaprint) are codec work
-    inside the same mapInPandas decode stub as the other multimodal
+    inside the same mapInArrow decode stub as the other multimodal
     ops; the FINGERPRINT-then-groupBy shape here is the production
     plan either way — a map-only digest (reads three 8-byte windows,
     never the full blob into the hash) followed by one key-bounded
@@ -2953,7 +2942,7 @@ def pack_ffd_bins(spark, sf_dir):
     bins, sharded 8 ways (pipeline.ffd_pack) — the batch-construction
     step that pack_token_budget's window-based next-fit approximates;
     FFD recovers the space next-fit wastes (≤ 11/9·OPT + 1 bins).
-    applyInPandas runs the exact greedy per shard; the sequential
+    applyInArrow runs the exact greedy per shard; the sequential
     region is one shard (sized by shard count, not corpus), shards
     pack concurrently, and the output is deterministic for any input
     partitioning.

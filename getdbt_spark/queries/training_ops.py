@@ -73,6 +73,7 @@ import re
 from pyspark.sql import functions as F
 
 from .. import functions as E
+from .. import kernels as K
 from .. import pipeline as P
 from . import ORACLES, query
 from .pipeline_queries import (
@@ -877,37 +878,38 @@ def _ivfpq_top5(e, subspaces: int = PQ_SUBSPACES, subdims: int = PQ_SUBDIMS,
     scored_in = grouped.join(lc.select("vec_id", "luts"), "vec_id")
     topn = 5 if rerank is None else rerank
 
-    def _adc(it_pdf, _topn=topn, _m=subspaces):
+    def _adc(batches, _topn=topn, _m=subspaces):
         import numpy as np
-        import pandas as pd
 
         mgrid = np.arange(_m, dtype=np.int64)[None, :]
-        for pdf in it_pdf:
-            vs, rs, ns, ds = [], [], [], []
-            for vid, nbrs, luts in zip(
-                pdf["vec_id"], pdf["nbrs"], pdf["luts"]
-            ):
-                A = np.array(list(nbrs), dtype=np.int64)
-                L = np.array(list(luts), dtype=np.int64)
-                adc = L[mgrid, A[:, 1:]].sum(axis=1)
-                order = np.lexsort((A[:, 0], adc))[:_topn]
-                t = len(order)
-                vs.append(np.full(t, vid, np.int64))
-                rs.append(np.arange(1, t + 1, dtype=np.int32))
-                ns.append(A[order, 0])
-                ds.append(adc[order])
-            if vs:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.concatenate(vs),
-                        "rnk": np.concatenate(rs),
-                        "neighbor_id": np.concatenate(ns),
-                        "adc_dist": np.concatenate(ds),
-                    }
-                )
+        for b in batches:
+            # whole batch at once: every candidate row of every query
+            # as one (nid, M codes) matrix, every query's M×K LUT as
+            # one (queries, M, K) block
+            nbrs = b.column("nbrs")
+            counts = np.diff(np.asarray(nbrs.offsets))
+            A = K.list_matrix(nbrs.flatten(), np.int64)
+            L = K.list_matrix(b.column("luts").flatten(), np.int64)
+            q = np.repeat(np.arange(b.num_rows), counts)
+            adc = L.reshape(b.num_rows, _m, -1)[
+                q[:, None], mgrid, A[:, 1:]
+            ].sum(axis=1)
+            order = np.lexsort((A[:, 0], adc, q))
+            rank = np.arange(len(order)) - (np.cumsum(counts) - counts)[
+                q[order]
+            ]
+            top = order[rank < _topn]
+            yield [
+                b.column("vec_id").take(q[top]),
+                rank[rank < _topn] + 1,
+                A[top, 0],
+                adc[top],
+            ]
 
-    topped = scored_in.mapInPandas(
-        _adc, "vec_id long, rnk int, neighbor_id long, adc_dist long"
+    topped = K.map_in_arrow(
+        scored_in,
+        _adc,
+        "vec_id long, rnk int, neighbor_id long, adc_dist long",
     )
     if rerank is None:
         # the kernel's (adc_dist, neighbor_id) lexsort IS the old

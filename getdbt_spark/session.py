@@ -38,7 +38,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # metadata, never results or plans, and the cost is driver-side
     # at ANY deployment scale (guide §5: the driver should do almost
     # no work).  Re-enable when debugging with
-    # GETDBT_SPARK_DF_DEBUG=1.
+    # GETDBT_SPARK_DF_DEBUG=1.  A static conf: it takes effect through
+    # the session builder, and configure() applies it to a session it
+    # did not build (see there).
     "spark.python.sql.dataFrameDebugging.enabled": (
         "true" if os.environ.get("GETDBT_SPARK_DF_DEBUG") == "1" else "false"
     ),
@@ -67,6 +69,16 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             # Non-settable in this deployment — leave the default.
             pass
+    # dataFrameDebugging is static (the set above fails on a caller's
+    # session) and PySpark caches it at the first wrapped call in the
+    # process: set that private cache, if this PySpark still has it.
+    from pyspark.errors import utils as err_utils
+
+    if hasattr(err_utils, "_enable_debugging_cache"):
+        err_utils._enable_debugging_cache = (
+            RUNTIME_CONFS["spark.python.sql.dataFrameDebugging.enabled"]
+            == "true"
+        )
     return spark
 
 

@@ -288,7 +288,10 @@ def first_seen_stream(events: DataFrame) -> DataFrame:
     for (``dropDuplicates`` keeps all key state forever and cannot
     pick a deterministic representative row).
 
-    ``applyInPandasWithState`` keyed on the fingerprint: state is one
+    ``applyInPandasWithState`` keyed on the fingerprint — the one
+    pandas kernel in the package (every other Python kernel is Arrow
+    record batches; PySpark 4.1 has no Arrow form of this state API,
+    see ``kernels``): state is one
     long (first-seen event-time ms); a micro-batch's rows for a key
     are deduped in-batch to the (ts, event_id)-minimal row, emitted
     IFF the key has no state yet.  State carries an EVENT-TIME timeout

@@ -84,6 +84,21 @@ def test_minhash_kernel_deterministic_across_invocations(spark, docs):
     assert all(len(v[1]) == P.MINHASH_N for v in one.values())
 
 
+def test_shingle_kernel_evaluates_once_after_the_exchange(spark, docs):
+    """asNondeterministic keeps Catalyst from pushing the callers'
+    ``shingles IS NOT NULL`` filter below the round-robin exchange as
+    a second copy of the kernel (which would shingle the corpus twice,
+    once at raw-scan parallelism): one ArrowEvalPython node."""
+    df = (
+        docs.select("doc_id", "text")
+        .repartition(4)
+        .select("doc_id", P._shingles_and_sig(3)("text").alias("ss"))
+        .filter(F.col("ss.shingles").isNotNull())
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+
+
 def test_frame_sample_covers_payload(spark, docs):
     """Frame extents partition the payload: offsets are in-bounds,
     stride-sampled indices are exactly 0, 7, 14, …, and a
@@ -236,7 +251,7 @@ def test_topk_cosine_blocked_shard_invariant_and_distributed(spark):
     old broadcast design had a ~30 GB executor ceiling)."""
     import inspect
 
-    src = inspect.getsource(P.topk_cosine_blocked)
+    src = inspect.getsource(P.bucketed_topk_cosine)
     assert ".collect(" not in src and "broadcast(" not in src
 
     embs = load_table(spark, SF, "embeddings")

@@ -888,9 +888,10 @@ def test_scaled_k_bounds_candidate_mass(spark):
     assert k_scaled > 8, "sf0.1 must exercise a non-floor k"
 
     def pair_count(k: int) -> int:
-        cell = P._kmeans_assign(
-            q, P._kmeans_train(q, k, 2), nprobe=2
-        ).select("vec_id", "cent_id")
+        cbs = P._pq_train(q, [(0, None, k, 2)])
+        cell = P._pq_assign(q, cbs, [(0, 0, None, 2)]).select(
+            "vec_id", "cent_id"
+        )
         ca = cell
         cb = cell.select(
             F.col("vec_id").alias("neighbor_id"), "cent_id"
