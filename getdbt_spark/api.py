@@ -19,23 +19,18 @@ import datetime as dt
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import models as M
 from .fixtures import sources_map
-from .io import load_table
+from .io import load_table, run_date_anchor
 from .runner import Runner
 
 
 def _anchor(spark: SparkSession, sf_dir: str) -> dt.date:
-    """Frozen run_date: max event date, collected once (two-phase
-    literal anchor — never ``current_date()``; SURVEY §7)."""
-    d = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max(F.to_date("ts")))
-        .collect()[0][0]
-    )
-    return d if d is not None else dt.date(2024, 1, 30)
+    """Frozen run_date: the max CREDIBLE event date
+    (``io.run_date_anchor`` — never ``current_date()``; SURVEY §7)."""
+    events = load_table(spark, sf_dir, "events")
+    return run_date_anchor(events, dt.date(2024, 1, 30))
 
 
 def run(

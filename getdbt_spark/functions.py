@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import materialize as MZ
+
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
@@ -363,27 +365,30 @@ def concat_bq(*cols: Column | str) -> Column:
     return F.concat(*[_col(c) for c in cols])
 
 
-def _lazy_cut(df: DataFrame) -> DataFrame:
-    """LAZY local checkpoint — the slice-offset helpers' lineage cut.
-
-    The helpers need two consumers (the per-slice counts/totals pass
-    and the final offset join) to read ONE materialization of the
-    kernel output.  An EAGER ``localCheckpoint()`` achieves that but
-    pays a dedicated materialization job per invocation — the fixed
-    overhead that made ``pack_token_budget`` read 2× its pre-rewrite
-    baseline at sf0.1 (VERDICT r10 #2).  ``eager=False`` materializes
-    on the FIRST consuming action instead (the counts collect, or the
-    grouped variants' broadcast-offsets build inside the single final
-    action), saving one job launch per invocation while keeping the
-    identical guarantee: both consumers share the checkpointed RDD's
-    blocks, so they read the same ranking.
-
-    Deliberately NOT ``persist()``: cached plans are matched by
-    LOGICAL PLAN, so a second invocation over a source whose files
-    changed (incremental warehouse rewrites) could silently serve the
-    first invocation's data.  Checkpoints are RDD-backed and never
-    plan-matched."""
-    return df.localCheckpoint(eager=False)
+def count_report(keys_ddl: str, parts: list[tuple]) -> DataFrame:
+    """One row per key (a tuple typed by ``keys_ddl``) and one BIGINT
+    column per metric: each ``(key, metric, frame)`` part contributes
+    ``frame``'s row count (0 when absent).  The lazy form of counting
+    frames on the driver and ``createDataFrame``-ing the counts: one
+    union plus one aggregate, no job at build."""
+    keys = list(dict.fromkeys(key for key, _, _ in parts))
+    spine = parts[0][2].sparkSession.createDataFrame(keys, keys_ddl)
+    fields = spine.schema.fields
+    union = spine.withColumn("__metric", F.lit(None).cast("string"))
+    for key, metric, frame in parts:
+        union = union.unionByName(
+            frame.select(
+                *[
+                    F.lit(v).cast(f.dataType).alias(f.name)
+                    for f, v in zip(fields, key)
+                ],
+                F.lit(metric).alias("__metric"),
+            )
+        )
+    metrics = list(dict.fromkeys(m for _, m, _ in parts))
+    return union.groupBy(*spine.columns).agg(
+        *[F.count_if(F.col("__metric") == m).alias(m) for m in metrics]
+    )
 
 
 _INT64_MAX = (1 << 63) - 1
@@ -402,6 +407,15 @@ def _int64_guard(acc: int, what: str) -> int:
             f"{what} exceeds BIGINT range: {acc}"
         )
     return acc
+
+
+def _default_slices(spark) -> int:
+    """``spark.sql.shuffle.partitions``, or the cluster's parallelism
+    where it is non-numeric ("auto" on managed Spark distributions)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (ValueError, TypeError):
+        return spark.sparkContext.defaultParallelism
 
 
 def with_global_rank(
@@ -432,10 +446,12 @@ def with_global_rank(
        no null mask for float64 — found by the round-11 property
        test), while Arrow passes every payload column through
        byte-exact;
-    3. one LAZY local checkpoint (``_lazy_cut``) so the per-slice
-       counts and the final projection read the SAME materialized
-       ranking (the lineage is traversed once, and no dedicated
-       materialization job is paid — the counts pass triggers it);
+    3. one LAZY lineage cut (``materialize.cut(eager=False)``) so the
+       per-slice counts and the final projection read the SAME
+       materialized ranking (the lineage is traversed once, and no
+       dedicated materialization job is paid — the counts pass
+       triggers it; an eager cut's extra job made
+       ``pack_token_budget`` read 2× its baseline at sf0.1);
     4. per-slice counts collapse to ≤ ``num_slices`` rows, cumulative
        offsets are computed driver-side (the repo's bounded
        scalar-anchor collect class — this is partition metadata, not
@@ -448,15 +464,7 @@ def with_global_rank(
     ``row_number`` would order them arbitrarily.
     """
     spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        # shuffle.partitions may be non-numeric ("auto") on managed
-        # Spark distributions — fall back to the cluster's parallelism.
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
+    n = num_slices or _default_slices(spark)
     cols = [_col(c) for c in order]
     ranged = (
         df.repartitionByRange(n, *cols)
@@ -483,12 +491,17 @@ def with_global_rank(
                 names=list(b.schema.names) + ["__gr_lrnk"],
             )
 
-    ranked = _lazy_cut(ranged.mapInArrow(_local_rank, out_schema))
+    ranked = MZ.cut(
+        ranged.mapInArrow(_local_rank, out_schema),
+        "slice_offsets",
+        eager=False,
+    )
     counts = {
         r["__gr_pid"]: r["n"]
-        for r in ranked.groupBy("__gr_pid").agg(
-            F.count("*").alias("n")
-        ).collect()
+        for r in MZ.rows(
+            ranked.groupBy("__gr_pid").agg(F.count("*").alias("n")),
+            "slice_offsets",
+        )
     }
     offsets, acc = [], 0
     for pid in sorted(counts):
@@ -525,7 +538,7 @@ def with_global_cumsum(
     kernel accumulates each slice's LOCAL prefix sum
     with no extra shuffle (Arrow, not pandas: int64 weights stay
     int64 with a real null mask — no float64/NaN dance — and float
-    payload columns keep NaN ≠ NULL byte-exact), one lazy checkpoint
+    payload columns keep NaN ≠ NULL byte-exact), one lazy lineage cut
     so the per-slice totals and the final projection read the same
     materialization, and ≤ ``num_slices`` per-slice totals collapse
     driver-side (bounded scalar-anchor class — partition metadata,
@@ -538,13 +551,7 @@ def with_global_cumsum(
     ``with_global_rank``.
     """
     spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
+    n = num_slices or _default_slices(spark)
     cols = [_col(c) for c in order]
     w = _col(weight)
     ranged = (
@@ -577,12 +584,19 @@ def with_global_cumsum(
                 names=list(b.schema.names) + ["__gc_lsum"],
             )
 
-    summed = _lazy_cut(ranged.mapInArrow(_local_cumsum, out_schema))
+    summed = MZ.cut(
+        ranged.mapInArrow(_local_cumsum, out_schema),
+        "slice_offsets",
+        eager=False,
+    )
     totals = {
         r["__gc_pid"]: r["s"]
-        for r in summed.groupBy("__gc_pid")
-        .agg(F.coalesce(F.sum("__gc_w"), F.lit(0)).alias("s"))
-        .collect()
+        for r in MZ.rows(
+            summed.groupBy("__gc_pid").agg(
+                F.coalesce(F.sum("__gc_w"), F.lit(0)).alias("s")
+            ),
+            "slice_offsets",
+        )
     }
     offsets, acc = [], 0
     for pid in sorted(totals):
@@ -662,14 +676,7 @@ def with_grouped_global_rank(
     """
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
+    n = num_slices or _default_slices(df.sparkSession)
     g = _col(group)
     cols = [_col(c) for c in order]
     ranged = (
@@ -708,7 +715,11 @@ def with_grouped_global_rank(
                 names=list(b.schema.names) + ["__gg_lrnk"],
             )
 
-    ranked = _lazy_cut(ranged.mapInArrow(_local_rank, out_schema))
+    ranked = MZ.cut(
+        ranged.mapInArrow(_local_rank, out_schema),
+        "slice_offsets",
+        eager=False,
+    )
     counts = ranked.groupBy("__gg_pid", "__gg_grp").agg(
         F.count("*").alias("__gg_n")
     )
@@ -775,14 +786,7 @@ def with_grouped_global_cumsum(
     """
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
+    n = num_slices or _default_slices(df.sparkSession)
     g = _col(group)
     cols = [_col(c) for c in order]
     w_col = _col(weight)
@@ -827,7 +831,11 @@ def with_grouped_global_cumsum(
                 names=list(b.schema.names) + ["__gc_lsum"],
             )
 
-    summed = _lazy_cut(ranged.mapInArrow(_local_cumsum, out_schema))
+    summed = MZ.cut(
+        ranged.mapInArrow(_local_cumsum, out_schema),
+        "slice_offsets",
+        eager=False,
+    )
     totals = summed.groupBy("__gc_pid", "__gc_grp").agg(
         F.coalesce(F.sum("__gc_w"), F.lit(0)).alias("__gc_n")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import materialize as MZ
 from .session import configure
 
 TABLES = (
@@ -109,7 +110,7 @@ def scalar_anchor(df: DataFrame, expr: F.Column, default):
     it return zero rows naturally (the source is empty, so any anchor
     yields no matches).  Pinned by tests/test_empty_corpus.py.
     """
-    v = df.agg(expr).collect()[0][0]
+    v = MZ.rows(df.agg(expr), "scalar_anchor")[0][0]
     return default if v is None else v
 
 

@@ -87,12 +87,10 @@ def quintly_youtube_allchannels_weekly(ctx):
     """Latest-partition dedup + ``* EXCEPT(partitionDate)``
     (``quintly_youtube_allchannels_weekly.sql:7-13``).
 
-    Spark shape: max-over-empty-window would hit a single partition;
-    instead compute the scalar max once and inject it as a literal
-    filter so Parquet partition pruning fires on a partitioned layout
-    (the two-phase pattern used by filter_partition_window)."""
+    Spark shape: the reference's own ``WHERE partitionDate = (SELECT
+    MAX(partitionDate) ...)`` — a scalar subquery, so the build runs
+    no job (a max-over-empty-window would funnel the table through a
+    single partition).  An empty source yields NULL, so zero rows."""
     raw = ctx.source("npo", "quintly_youtube_allchannels_weekly_raw")
-    latest = raw.agg(F.max("partitionDate")).collect()[0][0]
-    return raw.filter(F.col("partitionDate") == F.lit(latest)).drop(
-        "partitionDate"
-    )
+    latest = raw.select(F.max("partitionDate")).scalar()
+    return raw.filter(F.col("partitionDate") == latest).drop("partitionDate")

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from . import functions as E
 from . import kernels as K
+from . import materialize as MZ
 
 # ---------------------------------------------------------------------------
 # Shared text primitives (engine-parity critical: every formula here has an
@@ -287,47 +288,26 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
     return _kernel.asNondeterministic()
 
 
-def _plan_with_real_stats(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a persisted kernel-stage frame so Catalyst
-    plans every downstream join against the cache's TRUE size.
-
-    Catalyst estimates a Python kernel's output size from its
-    INPUT columns' pruned widths — it cannot see the kernel's
-    expansion factor (a shingle+signature struct is ~30× the source
-    text column; measured at sf10: estimate 10.7 MiB, true cached
-    size hundreds of MiB).  With the under-estimate, the planner
-    BROADCASTS data-sized join sides: harmless at sf0.1, but at the
-    sf10 decade it planned a 32M-row band table into the 8 GB driver
-    and died in BroadcastExchange (the r9 scale find — AQE cannot
-    demote a statically planned broadcast).  Counting the persisted
-    frame first swaps the estimate for the measured cached size, so
-    broadcast-vs-shuffle decisions stay correct at EVERY scale: small
-    corpora keep their broadcast fast path, large ones shuffle.  The
-    extra action costs one traversal the first consumer was about to
-    pay anyway — the cache fills now instead of then.
-    """
-    df.count()
-    return df
-
-
 def shingle_table(
     docs: DataFrame, k: int = 3, with_sig: bool = True
 ) -> DataFrame:
-    """Persisted ``(doc_id, shingles[, sig])`` of every doc with at
+    """Measured ``(doc_id, shingles[, sig])`` of every doc with at
     least ``k`` tokens — the shingle+signature stage shared by the
-    near-dup builders, each of which reads it from several consumers
-    (MEMORY_AND_DISK so a 100 TB run spills instead of evicting
-    mid-plan).  All per-doc math runs in one Arrow/numpy kernel
+    near-dup builders, each of which reads it from several consumers.
+    All per-doc math runs in one Arrow/numpy kernel
     (``_shingles_and_sig``); docs with < ``k`` tokens come back NULL
-    and are dropped, matching the oracles' ``len(w) >= k`` filter."""
-    from pyspark import StorageLevel
+    and are dropped, matching the oracles' ``len(w) >= k`` filter.
 
+    ``materialize.measure`` persists and counts the table: Catalyst
+    estimates the kernel output from its input columns (sf10: 10.7 MiB
+    vs hundreds of MiB true) and statically broadcast a 32M-row band
+    table into the driver (the r9 sf10 OOM)."""
     n_cores = docs.sparkSession.sparkContext.defaultParallelism
     ss = _shingles_and_sig(k, with_sig=with_sig)("text").alias("ss")
     out = [F.col("ss.shingles").alias("shingles")]
     if with_sig:
         out.append(F.col("ss.sig").alias("sig"))
-    return (
+    return MZ.measure(
         # Spread the kernel across cores even when the source arrives
         # as few input splits (a local parquet file is ONE split → one
         # task): shuffling the narrow (doc_id, text) projection is
@@ -338,8 +318,8 @@ def shingle_table(
         .repartition(n_cores)
         .select("doc_id", ss)
         .filter(F.col("ss.shingles").isNotNull())
-        .select("doc_id", *out)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", *out),
+        "shingle_table",
     )
 
 
@@ -382,7 +362,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     three-consumer intermediate: band explode + both sides of the
     verify join.
     """
-    sh = _plan_with_real_stats(shingle_table(docs))
+    sh = shingle_table(docs)
     bands = _lsh_bands(sh)
     band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
     left = bands.alias("l")
@@ -450,10 +430,9 @@ def ngram_jaccard_pairs(
     caveat as MinHash: ~n²/2^64 spurious merges, plus the 24-byte
     token-prefix bucket — corpus tokens are ≤ ~12 bytes.)
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    sh = _plan_with_real_stats(shingle_table(docs, k, with_sig=False))
+    sh = shingle_table(docs, k, with_sig=False)
     # Gram set size rides along from the array (free — no count
     # aggregation or window needed for |A|).
     grams = sh.select(
@@ -468,7 +447,7 @@ def ngram_jaccard_pairs(
     # churn, and the rank doubles as the gram POSITION the positional
     # filter below needs.
     wd = Window.partitionBy("doc_id").orderBy("df", "g")
-    pre = (
+    pre = MZ.measure(
         grams.join(dfreq, "g")
         .withColumn("pos", F.row_number().over(wd))
         .filter(
@@ -477,10 +456,9 @@ def ngram_jaccard_pairs(
             - F.ceil(F.lit(threshold) * F.col("n")).cast("int")
             + 1
         )
-        .select("doc_id", "n", "pos", "g")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # both sides of the self-join
+        .select("doc_id", "n", "pos", "g"),
+        "ngram_prefix",  # both sides of the self-join
     )
-    pre = _plan_with_real_stats(pre)
     # Required overlap for J >= t: O(A,B) >= ceil(t/(1+t) * (|A|+|B|)).
     # Positional filter (PPJoin): at a shared prefix gram sitting at
     # sorted positions (pa, pb), the remaining overlap is bounded by
@@ -748,23 +726,6 @@ def _block_topk_fn(k: int):
         ]
 
     return _block_topk
-
-
-def lineage_cut_lazy(df: DataFrame) -> DataFrame:
-    """Lazy lineage cut for a multi-consumer intermediate: RELIABLE
-    ``checkpoint`` when the deployment configured a durable checkpoint
-    dir (cluster — see ``session.durable_checkpoints``), executor-local
-    otherwise.  Materializes on first action and then serves every
-    consumer from blocks — persist-equivalent reuse PLUS a truncated
-    plan, which is required where a frame containing a join feeds BOTH
-    sides of a ``cogroup`` (Spark 4.1's ambiguous-self-join detector
-    has no dedup path for cogroup children, so the un-cut plan fails
-    analysis outright)."""
-    from .session import durable_checkpoints  # lazy: avoids import cycle
-
-    if durable_checkpoints(df.sparkSession):
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
 
 
 def bucketed_topk_cosine(
@@ -1073,80 +1034,41 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     logarithmic.  Each half-round is one groupBy + one equi-join on
     the EDGE set — never all-pairs, never a driver-side graph.
 
-    Fault tolerance at cluster scale: when the deployment configured a
-    durable checkpoint dir (see session.durable_checkpoints), the edge
-    set is cut from its lineage with a RELIABLE ``checkpoint()`` at
-    entry and every second round, persist-only in between — lineage
-    always roots in checkpoint FILES, so an executor loss recomputes
-    at most two star rounds, never the iteration history
-    (``localCheckpoint`` would store blocks on the very executors
-    whose loss it must survive).  On the single-host default the
-    executors ARE the driver, so lineage cuts use the one-job eager
-    ``localCheckpoint`` instead of paying a file round-trip per cut.
-    The convergence probe fuses into the per-round dedup aggregation:
-    one groupBy answers "did the edge set change" AND materializes the
-    next round's input — one action per round total.
+    Cost per round: two jobs, both through ``materialize``.  The
+    convergence probe fuses into the per-round dedup aggregation: one
+    groupBy answers "did the edge set change" and builds the next
+    round's input; an eager ``materialize.cut`` materializes it and a
+    one-row ``materialize.rows`` reads the flag (plus one cut of the
+    input edge set at entry).  On a deployment with a durable checkpoint dir
+    every cut writes RELIABLE checkpoint files, so lineage always roots
+    in files and an executor loss recomputes at most one star round,
+    never the iteration history (``localCheckpoint`` would store
+    blocks on the very executors whose loss it must survive); on the
+    single-host default the executors ARE the driver and the cut is
+    the one-job eager ``localCheckpoint``.
     """
-    from pyspark import StorageLevel
-
-    from .session import durable_checkpoints  # lazy: avoids import cycle
-
-    durable = durable_checkpoints(pairs.sparkSession)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        """Materialize + cut lineage.
-
-        Durable deployments (cluster checkpoint dir configured, or
-        GETDBT_SPARK_RELIABLE_CKPT=1): persist → checkpoint(eager) →
-        unpersist.  RDD checkpointing runs a SECOND job over the
-        lineage to write the checkpoint files; caching first turns
-        that second pass into a block read instead of a full recompute
-        (for the initial edge set that recompute would be the entire
-        pair-generation plan — measured 2× the whole query).  The
-        cache is dropped immediately: every later read comes from the
-        checkpoint files.
-
-        Single-host default: eager ``localCheckpoint`` — ONE job, no
-        file round-trip.  Locally the executors are the driver
-        process, so reliable files add no fault tolerance, only fixed
-        overhead (see session.durable_checkpoints).
-        """
-        if durable:
-            cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-            out = cached.checkpoint(eager=True)
-            cached.unpersist()
-            return out
-        return df.localCheckpoint(eager=True)
-
     u, v, m = F.col("u"), F.col("v"), F.col("m")
     # Orient every pair large→small; the loop invariant is u > v.
-    edges = _cut(
+    edges = MZ.cut(
         pairs.filter(F.col("a_id") != F.col("b_id"))
         .select(
             F.greatest("a_id", "b_id").alias("u"),
             F.least("a_id", "b_id").alias("v"),
         )
-        .distinct()
+        .distinct(),
+        "cc_edges",
     )
     from pyspark.sql import Window
 
-    # Per-round cost shape (the round-13 optimization): ONE action and
-    # three exchanges.  The old loop's two-branch small-star union made
-    # Catalyst recompute BOTH window passes per branch (no common-
-    # subtree sharing), its distinct was a separate exchange, and the
-    # symmetric-difference convergence probe was a second job per
-    # round on top of the checkpoint-write jobs — ~7 exchanges and 2-3
-    # jobs per round of fixed overhead on an edge set that is tiny
+    # Per-round cost shape (the round-13 optimization): three exchanges.
+    # The old loop's two-branch small-star union made Catalyst recompute
+    # BOTH window passes per branch (no common-subtree sharing), its
+    # distinct was a separate exchange, and the symmetric-difference
+    # convergence probe was a separate pass over both edge sets — ~7
+    # exchanges per round of fixed overhead on an edge set that is tiny
     # next to the corpus.  Now the small-star emit is one per-row
     # explode (single subtree), and dedup + convergence fuse into one
-    # groupBy whose single aggregate action also materializes the
-    # persisted next-round edge set.  Lineage cuts: durable
-    # deployments keep the reliable checkpoint every SECOND round
-    # (executor loss recomputes at most two star rounds); locally the
-    # per-round persist is the lineage anchor (blocks live in the one
-    # process whose loss ends the job anyway).
-    round_no = 0
-    to_release: list[DataFrame] = []
+    # groupBy whose cut output is the next round's edge set.
     while True:
         # Large-star: over the symmetric neighborhood N(x), hang every
         # neighbor y > x off m(x) = min(N(x) ∪ {x}).  One window over
@@ -1182,45 +1104,30 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         # Dedup AND convergence in one aggregation: a (u,v) key sits in
         # the new multiset iff some row carries is_new=1 and in the old
         # set iff some row carries 0, so the symmetric difference is
-        # nonempty iff any group is single-sided (min == max).  The
-        # single aggregate action below doubles as the materialization
-        # of the persisted frame the next round (and the caller) reads.
+        # nonempty iff any group is single-sided (min == max); the
+        # next round (and the caller) reads the same cut frame.
         grouped = emit.withColumn("is_new", F.lit(1)).unionAll(
             edges.select("u", "v").withColumn("is_new", F.lit(0))
         ).groupBy("u", "v").agg(
             F.min("is_new").alias("mn"), F.max("is_new").alias("mx")
         )
-        # Materialize AND truncate the logical plan every round.  With
-        # persist-only anchoring, round N's LOGICAL plan still nests
-        # all N-1 predecessors, so Catalyst/AQE re-analyze a growing
-        # tree each round and no generated class is ever reused —
-        # measured 2.1→3.8 s/round on a 256-edge set, vs ~0.55 s
-        # steady-state once every round reads a constant-depth
-        # LogicalRDD and hits the codegen cache (round 1 pays the one
-        # compile).  Locally that cut is ``localCheckpoint``; durable
-        # deployments persist + reliable-checkpoint every SECOND round
-        # (the executor-loss recompute window stays two star rounds).
-        if durable:
-            grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-            to_release.append(grouped)
-        else:
-            grouped = grouped.localCheckpoint(eager=True)
-        changed = grouped.agg(
-            F.sum((F.col("mn") == F.col("mx")).cast("int")).alias("d")
-        ).first()[0]
-        small = grouped.filter(F.col("mx") == 1).select("u", "v")
-        round_no += 1
-        if durable and round_no % 2 == 0:
-            small = _cut(small)
-        edges = small
+        # Truncate the logical plan every round.  Without the cut,
+        # round N's LOGICAL plan nests all N-1 predecessors, so
+        # Catalyst/AQE re-analyze a growing tree each round and no
+        # generated class is ever reused — measured 2.1→3.8 s/round on
+        # a 256-edge set, vs ~0.55 s steady-state once every round
+        # reads a constant-depth scan and hits the codegen cache
+        # (round 1 pays the one compile).
+        grouped = MZ.cut(grouped, "cc_round")
+        changed = MZ.rows(
+            grouped.agg(
+                F.sum((F.col("mn") == F.col("mx")).cast("int")).alias("d")
+            ),
+            "cc_converged",
+        )[0][0]
+        edges = grouped.filter(F.col("mx") == 1).select("u", "v")
         if not changed:
             break
-    for df in to_release[:-1]:
-        df.unpersist()  # durable mode: ancestors of the fixpoint frame
-    # Durable mode keeps the last grouped frame cached (it backs the
-    # fixpoint edge set the caller reads; harness clearCache owns its
-    # release).  Local mode anchors rounds in localCheckpoint blocks,
-    # which the ContextCleaner drains once the frames are collected.
     # At the fixpoint the edge set is a star per component (u → root).
     return edges.select(u.alias("id"), v.alias("comp")).unionAll(
         edges.select(v.alias("id"), v.alias("comp")).distinct()
@@ -1279,8 +1186,9 @@ def kmeans_quantized(
     map partition — never vectors; the codebook rebuild is a
     model-sized (k×d) driver collect, MLlib KMeans' own shape.  Empty
     clusters keep their previous centroid.  ``iters`` is small and
-    fixed, so the lineage stays shallow; a long-running trainer would
-    localCheckpoint per round like connected_components.
+    fixed and every round's model comes back as a literal codebook
+    (``materialize.rows``), so the lineage never grows round to round
+    and no per-round cut is needed.
     """
     # Fan-out parallelism guard (same as the deployment-IVFPQ stack):
     # every round's scoring is a map-side pass over THIS frame, so a
@@ -1383,8 +1291,8 @@ def _pq_train(q: DataFrame, spec: list) -> list:
 
     q = q.persist()
     max_k = max(k for (_, _, k, _) in spec)
-    init = (
-        q.filter(F.col("vec_id") < max_k).select("vec_id", "qv").collect()
+    init = MZ.rows(
+        q.filter(F.col("vec_id") < max_k).select("vec_id", "qv"), "pq_init"
     )
     cbs = []
     for lo, hi, k, _ in spec:
@@ -1431,15 +1339,15 @@ def _pq_train(q: DataFrame, spec: list) -> list:
                 yield [np.concatenate(c) for c in (ms, cis, poss, ss, ns)]
 
         try:
-            agg = (
+            agg = MZ.rows(
                 K.map_in_arrow(
                     q.select("qv"),
                     _partials,
                     "m int, ci long, pos int, s long, n long",
                 )
                 .groupBy("m", "ci", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n")),
+                "pq_round",
             )
         finally:
             # The round's codebook broadcast is only read inside this
@@ -1882,8 +1790,8 @@ def minhash_lsh_pairs_incremental(
     the same ownership rule as sim_ann_lsh / dedup_containment; the
     bench/sweep/verify harnesses all do this.
     """
-    sh_new = _plan_with_real_stats(shingle_table(new_docs))
-    sh_idx = _plan_with_real_stats(shingle_table(index_docs))
+    sh_new = shingle_table(new_docs)
+    sh_idx = shingle_table(index_docs)
     band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
     candidates = (
         _lsh_bands(sh_new)

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import functions as E
+from .. import materialize as MZ
 from .. import pipeline as P
 from .pipeline_queries import (
     _docs,
@@ -303,7 +304,9 @@ def dsir_importance_weights(spark, sf_dir):
     )
     # 1-row scalar anchor (repo convention for distribution totals);
     # `or 0` keeps the empty-corpus sweep alive (sum over 0 rows = NULL)
-    tot = freq.agg(F.sum("r").alias("rr"), F.sum("t").alias("tt")).first()
+    tot = MZ.rows(
+        freq.agg(F.sum("r").alias("rr"), F.sum("t").alias("tt")), "dsir_totals"
+    )[0]
     rr, tt = int(tot["rr"] or 0), int(tot["tt"] or 0)
     lam = freq.select(
         "b",
@@ -1246,7 +1249,7 @@ def _bpe_train_apply(spark, sf_dir):
     """Shared BPE training+apply chain: iterate BPE_MERGES rounds of
     (recount adjacent pairs -> collect the argmax rule as a 1-row
     scalar anchor -> greedy-leftmost merge via run-parity windows),
-    localCheckpoint per round.  Returns the final (doc_id, pos, tok)
+    one eager lineage cut per round.  Returns the final (doc_id, pos, tok)
     rows AND the learned rule list [(rank, t1, t2, n_occurrences)] —
     ``bpe_encode`` formats the rows, ``bpe_merge_table`` the rules, so
     the two registered views of the trainer can never drift.  Trains
@@ -1271,15 +1274,15 @@ def _bpe_train_apply(spark, sf_dir):
     wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rules = []
     for rnd in range(1, BPE_MERGES + 1):
-        top = (
+        top = MZ.rows(
             rows.select("doc_id", "pos", "tok")
             .withColumn("nxt", F.lead("tok").over(wo))
             .filter(F.col("nxt").isNotNull())
             .groupBy("tok", "nxt")
             .agg(F.count("*").alias("c"))
             .orderBy(F.desc("c"), "tok", "nxt")
-            .limit(1)
-            .collect()
+            .limit(1),
+            "bpe_round",
         )
         if not top:  # no adjacent pairs anywhere: remaining rounds no-op
             break
@@ -1314,9 +1317,8 @@ def _bpe_train_apply(spark, sf_dir):
             "consumed",
             F.coalesce(F.lag("mstart").over(wo), F.lit(False)),
         )
-        rows = (
-            l5.filter(~F.col("consumed"))
-            .select(
+        rows = MZ.cut(
+            l5.filter(~F.col("consumed")).select(
                 "doc_id",
                 "pos",
                 F.when(
@@ -1324,8 +1326,8 @@ def _bpe_train_apply(spark, sf_dir):
                 )
                 .otherwise(F.col("tok"))
                 .alias("tok"),
-            )
-            .localCheckpoint()
+            ),
+            "bpe_round",
         )
     _BPE_TRAINED[memo_key] = (rows, rules)
     return rows, rules
@@ -1962,19 +1964,22 @@ def _cluster_verdict(spark, sf_dir, nprobe: int, assign=None):
     (VERDICT r10 #8) from the same trainer/threshold/election code.
 
     ``assign`` lets a caller that already materialized the probe
-    assignment (``dedup_cluster_recall`` persists one per variant for
+    assignment (``dedup_cluster_recall`` cuts one per variant for
     its own numerators) pass it in — one kmeans run instead of two,
     and the caller owns the frame's lifecycle.  When the verdict
-    builds its own, it uses ``localCheckpoint()`` rather than
+    builds its own, it cuts it (``materialize.cut``) rather than
     ``persist()``: checkpoint blocks are RDD-backed and reclaimed by
     the ContextCleaner once unreferenced, while a cached plan lives in
     the CacheManager for the session — three verdict invocations per
     recall run were leaking three assignment caches (ADVICE r11)."""
     e = P.with_norm(_embs(spark, sf_dir))
     if assign is None:
-        assign = P.kmeans_probe_assign(
-            e, k=8, iters=2, nprobe=nprobe
-        ).select("vec_id", "cent_id").localCheckpoint()
+        assign = MZ.cut(
+            P.kmeans_probe_assign(e, k=8, iters=2, nprobe=nprobe).select(
+                "vec_id", "cent_id"
+            ),
+            "probe_assign",
+        )
     pairs = _probe_cell_pairs(e, assign)
     comp = P.connected_components(pairs)
     base = assign.select("vec_id").distinct()
@@ -2118,17 +2123,16 @@ def dedup_cluster_recall(spark, sf_dir):
     frame and the numerators reuse ``_probe_cell_pairs`` + the
     registered variant queries, so every number is derived from the
     SAME frames the verdicts ship — the evaluation cannot drift from
-    the evaluated.  The counts are bounded scalar anchors (components
-    and pair lists are metric-grain); the returned frame is a 3-row
-    literal, which is the right shape for an evaluation report at any
-    corpus size — the expensive inputs stay distributed.
+    the evaluated.  The report is one lazy union-plus-aggregate over
+    the pair frames (``functions.count_report``): three rows, no
+    driver round trip, and the expensive inputs stay distributed.
     """
-    from pyspark.sql import types as T
-
-    xp = _emb_exact_pairs(spark, sf_dir).select("a_id", "b_id")
-    xp = xp.localCheckpoint()
+    xp = MZ.cut(
+        _emb_exact_pairs(spark, sf_dir).select("a_id", "b_id"),
+        "recall_exact_pairs",
+        eager=False,
+    )
     e = P.with_norm(_embs(spark, sf_dir))
-    ex = dedup_embedding_cluster(spark, sf_dir).localCheckpoint()
 
     def co_pairs(verdict):
         a = verdict.select(F.col("vec_id").alias("a_id"), "canonical_id")
@@ -2139,11 +2143,12 @@ def dedup_cluster_recall(spark, sf_dir):
             .select("a_id", "b_id")
         )
 
-    n_exact_pairs = xp.count()
-    xcp = co_pairs(ex).localCheckpoint()
-    n_exact_copairs = xcp.count()
-
-    rows = []
+    xcp = MZ.cut(
+        co_pairs(dedup_embedding_cluster(spark, sf_dir)),
+        "recall_exact_pairs",
+        eager=False,
+    )
+    parts = []
     for variant, nprobe, verdict_q in (
         ("ivf", 1, dedup_embedding_cluster_ivf),
         # r11 (VERDICT r10 #8): margin analysis showed the residual
@@ -2152,50 +2157,40 @@ def dedup_cluster_recall(spark, sf_dir):
         # vectors), so the honest dial is uniform depth 3 — measured
         # 14/14 pair recall at 1.5× nprobe=2's candidate mass
         # (tools/cluster_recall_margin.py; SCALE.md round-11).
-        # nprobe 2/3 reuse THIS loop's persisted assign (same trainer,
-        # same params as the registered variants — one kmeans run per
-        # variant instead of two, and no leaked verdict-side cache)
+        # nprobe 2/3 reuse THIS loop's assignment (same trainer, same
+        # params as the registered variants — one kmeans run per
+        # variant instead of two)
         ("multiprobe", 2, lambda s, d, a: _cluster_verdict(s, d, 2, a)),
         ("multiprobe3", 3, lambda s, d, a: _cluster_verdict(s, d, 3, a)),
     ):
-        assign = P.kmeans_probe_assign(
-            e, k=8, iters=2, nprobe=nprobe
-        ).select("vec_id", "cent_id").persist()
-        vp = _probe_cell_pairs(e, assign).localCheckpoint()
+        assign = MZ.cut(
+            P.kmeans_probe_assign(e, k=8, iters=2, nprobe=nprobe).select(
+                "vec_id", "cent_id"
+            ),
+            "probe_assign",
+            eager=False,
+        )
+        vp = MZ.cut(
+            _probe_cell_pairs(e, assign), "recall_variant_pairs", eager=False
+        )
         verdict = (
             verdict_q(spark, sf_dir, assign)
             if nprobe > 1
             else verdict_q(spark, sf_dir)
         )
-        vc = co_pairs(verdict).localCheckpoint()
-        rows.append(
+        key = (variant,)
+        parts += [
+            (key, "n_exact_pairs", xp),
+            (key, "n_pairs", vp),
+            (key, "n_pair_hits", vp.join(xp, ["a_id", "b_id"])),
+            (key, "n_exact_copairs", xcp),
             (
-                variant,
-                n_exact_pairs,
-                vp.count(),
-                vp.join(xp, ["a_id", "b_id"]).count(),
-                None,
-                n_exact_copairs,
-                vc.join(xcp, ["a_id", "b_id"]).count(),
-                None,
-            )
-        )
-        assign.unpersist()
-    out = spark.createDataFrame(
-        rows,
-        T.StructType(
-            [
-                T.StructField("variant", T.StringType()),
-                T.StructField("n_exact_pairs", T.LongType()),
-                T.StructField("n_pairs", T.LongType()),
-                T.StructField("n_pair_hits", T.LongType()),
-                T.StructField("pair_recall", T.DoubleType()),
-                T.StructField("n_exact_copairs", T.LongType()),
-                T.StructField("n_copair_hits", T.LongType()),
-                T.StructField("cluster_recall", T.DoubleType()),
-            ]
-        ),
-    )
+                key,
+                "n_copair_hits",
+                co_pairs(verdict).join(xcp, ["a_id", "b_id"]),
+            ),
+        ]
+    out = E.count_report("variant string", parts)
     # ratios computed ENGINE-side with the repo's round_to so the
     # float boundary matches the oracle's round(x, 6) exactly
     return out.select(

@@ -25,6 +25,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from .. import functions as E
 from . import ORACLES, query
 
 # The battery: one representative, oracle-checked operator per family
@@ -167,7 +168,9 @@ def dq_degenerate_probe(spark, sf_dir):
     builders against them — the probe exercises production code paths,
     not re-implementations.  A battery operator that crashes fails the
     whole id (the driver sees ``err``); one whose degenerate row count
-    drifts from its own oracle's replay hash-mismatches.
+    drifts from its own oracle's replay hash-mismatches.  The counts
+    are one lazy report (``functions.count_report``): the caller's
+    action counts every operator's output, with no driver round trip.
 
     Scale: every battery input is 0, |documents| or |embeddings| rows
     by construction; the only full-scale work is the map-side
@@ -216,12 +219,11 @@ def dq_degenerate_probe(spark, sf_dir):
         ).otherwise(F.col("embedding")),
     ).write.mode("overwrite").parquet(f"{base}/nullcomp/embeddings.parquet")
 
-    rows = []
-    for probe, _suffix, ops in _BATTERY:
-        for op in ops:
-            rows.append(
-                (probe, op, QUERIES[op](spark, f"{base}/{probe}").count())
-            )
-    return spark.createDataFrame(
-        rows, "probe string, operator string, n_rows long"
+    return E.count_report(
+        "probe string, operator string",
+        [
+            ((probe, op), "n_rows", QUERIES[op](spark, f"{base}/{probe}"))
+            for probe, _suffix, ops in _BATTERY
+            for op in ops
+        ],
     )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import functions as E
+from .. import materialize as MZ
 from .. import pipeline as P
 from ..io import credible_clock, load_table, run_date_anchor, scalar_anchor
 from . import query
@@ -254,7 +255,7 @@ def agg_pivot(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
         .pivot("o_orderpriority", _PRIORITIES)
-        .count()
+        .agg(F.count(F.lit(1)))
     )
     cols = [F.col("o_orderstatus")] + [
         F.coalesce(F.col(f"`{v}`"), F.lit(0)).alias(a)
@@ -3014,7 +3015,7 @@ def dq_skew_report(spark, sf_dir):
     """
     o = _t(spark, sf_dir, "orders")
     sizes = o.groupBy("o_custkey").agg(F.count("*").alias("c"))
-    n_rows = o.count()
+    n_rows = scalar_anchor(o, F.count("*"), 0)
     return sizes.agg(
         F.count("*").cast("long").alias("n_keys"),
         F.max("c").cast("long").alias("max_key_rows"),
@@ -3415,9 +3416,10 @@ def win_pareto_share(spark, sf_dir):
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(_cents("o_totalprice")).alias("cents")
     )
-    tot = per_cust.agg(
-        F.sum("cents").alias("t"), F.count("*").alias("n")
-    ).collect()[0]
+    tot = MZ.rows(
+        per_cust.agg(F.sum("cents").alias("t"), F.count("*").alias("n")),
+        "customer_totals",
+    )[0]
     tot_cents, n_cust = (tot["t"] or 0), (tot["n"] or 0)
     order = [F.col("cents").desc(), F.col("o_custkey")]
     top = per_cust.orderBy(*order).limit(200)
@@ -4117,12 +4119,15 @@ def sink_zorder_clustered(spark, sf_dir):
     back = write_zordered(
         li, path, ["l_partkey", "l_suppkey"], n_files=8
     )
-    row = back.agg(
-        F.min(F.col("l_partkey").cast("long")),
-        F.max(F.col("l_partkey").cast("long")),
-        F.min(F.col("l_suppkey").cast("long")),
-        F.max(F.col("l_suppkey").cast("long")),
-    ).collect()[0]
+    row = MZ.rows(
+        back.agg(
+            F.min(F.col("l_partkey").cast("long")),
+            F.max(F.col("l_partkey").cast("long")),
+            F.min(F.col("l_suppkey").cast("long")),
+            F.max(F.col("l_suppkey").cast("long")),
+        ),
+        "zorder_bounds",
+    )[0]
     # empty-input-safe bounds (None min/max on a zero-row table)
     lo = [row[0] if row[0] is not None else 0,
           row[2] if row[2] is not None else 0]
@@ -5146,7 +5151,7 @@ def agg_dau_mau_stickiness(spark, sf_dir):
         .select("user_id", F.to_date("ts").alias("d"))
         .distinct()
     )
-    d0, d1 = act.agg(F.min("d"), F.max("d")).collect()[0]
+    d0, d1 = MZ.rows(act.agg(F.min("d"), F.max("d")), "activity_range")[0]
     if d0 is None:  # empty corpus: any anchor yields zero rows
         d0 = d1 = dt.date(1970, 1, 1)
     anchors = act.select(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import fixtures as FX
 from .. import functions as E
+from .. import materialize as MZ
 from ..functions import safe_offset
 from ..io import credible_clock, run_date_anchor
 from ..io import load_table as _lt
@@ -35,7 +36,7 @@ def _t(spark, sf_dir, name):
     return _lt(spark, sf_dir, name)
 
 
-_ANCHOR_CACHE: dict[tuple[str, str], dt.date | None] = {}
+_ANCHOR_CACHE: dict[tuple[str, str], dt.date] = {}
 
 
 def _run_model(spark, sf_dir: str, name: str, reuse: str | None = None):
@@ -66,19 +67,11 @@ def _run_model(spark, sf_dir: str, name: str, reuse: str | None = None):
     # every model entry (keyed by applicationId: a new session means a
     # new JVM and possibly a regenerated corpus).
     akey = (spark.sparkContext.applicationId, sf_dir)
-    if akey not in _ANCHOR_CACHE:  # a None anchor (empty events) caches too
-        _ANCHOR_CACHE[akey] = (
-            load_table(spark, sf_dir, "events")
-            # credible clocks only: one poisoned 9999 timestamp would
-            # otherwise become the run date and blow the weekly spine
-            # up ~500× (io.run_date_anchor; oracle_ctes mirrors it)
-            .filter(credible_clock("ts"))
-            .agg(F.max(F.to_date("ts")))
-            .collect()[0][0]
+    if akey not in _ANCHOR_CACHE:
+        _ANCHOR_CACHE[akey] = run_date_anchor(
+            load_table(spark, sf_dir, "events"), dt.date(2024, 1, 30)
         )
-    anchor = _ANCHOR_CACHE[akey]
-    run_date = anchor if anchor is not None else dt.date(2024, 1, 30)
-    runner = Runner(spark, sources_map(spark, sf_dir), run_date)
+    runner = Runner(spark, sources_map(spark, sf_dir), _ANCHOR_CACHE[akey])
     return runner.run([name], reuse=reuse)[name]
 
 # ---------------------------------------------------------------------------
@@ -1048,9 +1041,12 @@ def streaming_incremental_sink(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     # generation split on credible clocks only — a poisoned 9999 max
     # would put `mid` in year ~6000 and the whole feed in generation 1
-    lo, hi = e.filter(credible_clock("ts")).agg(
-        F.min(F.to_date("ts")), F.max(F.to_date("ts"))
-    ).collect()[0]
+    lo, hi = MZ.rows(
+        e.filter(credible_clock("ts")).agg(
+            F.min(F.to_date("ts")), F.max(F.to_date("ts"))
+        ),
+        "stream_generations",
+    )[0]
     if lo is None:  # empty corpus: single empty generation
         lo = hi = dt.date(2024, 1, 30)
     mid = lo + (hi - lo) / 2
@@ -1167,9 +1163,10 @@ def streaming_psi_drift(spark, sf_dir):
     ).filter(F.date_trunc("day", F.col("ts")) < ref_cut)
     ref_rows = {
         r["bucket"]: r["r"]
-        for r in base_ref.groupBy("bucket")
-        .agg(F.count("*").alias("r"))
-        .collect()
+        for r in MZ.rows(
+            base_ref.groupBy("bucket").agg(F.count("*").alias("r")),
+            "drift_reference",
+        )
     }
     r_tot = sum(ref_rows.values())
     ref_df = spark.createDataFrame(

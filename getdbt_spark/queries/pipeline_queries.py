@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import functions as E
+from .. import materialize as MZ
 from .. import pipeline as P
 from ..io import load_table, scalar_anchor
 from . import query
@@ -396,13 +397,14 @@ def sim_ann_ivf(spark, sf_dir):
     )
     # lineage-cut (lazy): both replicated sides of the bucketed block
     # search consume it, and a joined frame feeding both sides of a
-    # cogroup needs the cut to pass the ambiguous-self-join check (see
-    # pipeline.lineage_cut_lazy).  The in-bucket search is the shared
+    # cogroup needs the cut to pass the ambiguous-self-join check
+    # (Spark 4.1 has no dedup path for cogroup children, so the un-cut
+    # plan fails analysis outright).  The in-bucket search is the shared
     # block-matmul kernel (pipeline.bucketed_topk_cosine): one dense
     # numpy product per (bucket, chunk, shard) block instead of a
     # Σ|cell|² pair self-join scored by the interpreted zip_with
     # cosine fold.
-    ea = P.lineage_cut_lazy(P.assign_nearest_cosine(e, cent))
+    ea = MZ.cut(P.assign_nearest_cosine(e, cent), "ivf_assign", eager=False)
     return P.bucketed_topk_cosine(ea, k=5)
 
 
@@ -1821,7 +1823,7 @@ def text_perplexity_proxy(spark, sf_dir):
     words = d.select(
         "doc_id", F.explode(P.ws_tokens(F.col("text"))).alias("word")
     )
-    total = words.count()
+    total = scalar_anchor(words, F.count("*"), 0)
     freq = words.groupBy("word").agg(
         (F.count("*").cast("double") / F.lit(float(total))).alias("p")
     )
@@ -2063,7 +2065,7 @@ def sim_recall_at_k(spark, sf_dir):
     hits = ivf5.join(
         exact5.select("vec_id", "neighbor_id"), ["vec_id", "neighbor_id"]
     )
-    n_queries = e.select("vec_id").distinct().count()
+    n_queries = scalar_anchor(e.select("vec_id").distinct(), F.count("*"), 0)
     return hits.agg(
         F.lit(n_queries).cast("long").alias("n_queries"),
         F.count("*").alias("n_hits"),
@@ -2233,7 +2235,7 @@ def text_keyword_tfidf(spark, sf_dir):
     words = d.select(
         "doc_id", F.explode(P.ws_tokens(F.col("text"))).alias("word")
     )
-    n_docs = d.count()
+    n_docs = scalar_anchor(d, F.count("*"), 0)
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df_t = words.groupBy("word").agg(
         F.count_distinct("doc_id").alias("df")
@@ -2914,7 +2916,7 @@ def sim_ann_ivf_trained(spark, sf_dir):
     assign = P.kmeans_quantized(e, k=8, iters=2).select(
         "vec_id", F.col("cluster").alias("cent_id")
     )
-    ea = P.lineage_cut_lazy(e.join(assign, "vec_id"))
+    ea = MZ.cut(e.join(assign, "vec_id"), "ivf_assign", eager=False)
     return P.bucketed_topk_cosine(ea, k=5)
 
 
@@ -3059,8 +3061,8 @@ def sample_hard_negatives(spark, sf_dir):
     # exact for ANY fixture (a fixed k=499 silently diverged from the
     # all-pairs oracle once a label exceeded ~500 members).  One tiny
     # scalar aggregate, same anchor pattern as the max-date literals.
-    k_needed = (
-        e.groupBy("label").count().agg(F.max("count")).first()[0] or 0
+    k_needed = scalar_anchor(
+        e.groupBy("label").agg(F.count("*").alias("n")), F.max("n"), 0
     ) + 1
     topk = P.topk_cosine_blocked(_embs(spark, sf_dir), k=k_needed)
     lbl = e.select("vec_id", "label")
@@ -3717,19 +3719,18 @@ def dedup_simhash_radius(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     n_cores = spark.sparkContext.defaultParallelism
-    sh = (
+    sh = MZ.measure(
         d.select("doc_id", "text")
         .repartition(n_cores)
         .select(
             "doc_id", P.simhash60_kernel()(F.col("text")).alias("simhash")
-        )
-        .persist()
+        ),
+        # Plan the block self-join below against the MEASURED cached
+        # size: static estimates below Arrow kernels are ~50× low and
+        # would statically broadcast a data-sized fingerprint table at
+        # scale (the r9 sf10 broadcast-OOM class, pipeline.shingle_table).
+        "simhash_table",
     )
-    # Plan the block self-join below against the MEASURED cached size:
-    # static estimates below Arrow kernels are ~50× low and would
-    # statically broadcast a data-sized fingerprint table at scale
-    # (the r9 sf10 broadcast-OOM class, pipeline._plan_with_real_stats).
-    sh = P._plan_with_real_stats(sh)
     blocks = sh.select(
         "doc_id",
         "simhash",

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import functions as E
-from ..io import load_table
+from ..io import load_table, scalar_anchor
 from . import query
 
 
@@ -245,9 +245,9 @@ def filter_partition_window(spark, sf_dir):
     BroadcastNestedLoopJoin that full-scans the fact table at 100 TB.
     """
     ev = _t(spark, sf_dir, "events")
-    window_start = ev.agg(
-        F.date_sub(F.to_date(F.max("ts")), 8).alias("_from")
-    ).first()[0]
+    window_start = scalar_anchor(
+        ev, F.date_sub(F.to_date(F.max("ts")), 8), None
+    )
     return (
         ev.filter(F.to_date("ts") >= F.lit(window_start))
         .groupBy(F.to_date("ts").alias("evt_date"), "event_type")

@@ -74,7 +74,9 @@ from pyspark.sql import functions as F
 
 from .. import functions as E
 from .. import kernels as K
+from .. import materialize as MZ
 from .. import pipeline as P
+from ..io import scalar_anchor
 from . import ORACLES, query
 from .pipeline_queries import (
     _COSINE_ORACLE_CORE,
@@ -223,6 +225,48 @@ def _ivf_top5(ep, max_probe: int):
     )
 
 
+def _recall_at5(keys_ddl, variants, exact, queries=None):
+    """Recall@5 report, one row per ``(key, top5)`` variant: the key
+    columns (``keys_ddl``), ``n_queries`` (distinct ids of ``queries``,
+    default the exact ranking's), ``n_hits`` (top-5 rows among the
+    exact ranking's ``rnk <= 5``) and ``recall_at_5``.  One lazy
+    ``functions.count_report`` crossed with one count."""
+    exact5 = MZ.cut(
+        exact.filter(F.col("rnk") <= 5).select("vec_id", "neighbor_id"),
+        "recall_exact_top5",
+        eager=False,
+    )
+    hits = E.count_report(
+        keys_ddl,
+        [
+            (
+                key,
+                "n_hits",
+                top5.select("vec_id", "neighbor_id").join(
+                    exact5, ["vec_id", "neighbor_id"]
+                ),
+            )
+            for key, top5 in variants
+        ],
+    )
+    n_queries = (
+        (exact5 if queries is None else queries)
+        .select("vec_id")
+        .distinct()
+        .agg(F.count("*").alias("n_queries"))
+    )
+    return hits.crossJoin(n_queries).select(
+        *hits.columns[:-1],
+        "n_queries",
+        "n_hits",
+        E.round_to(
+            F.col("n_hits").cast("double")
+            / (F.lit(5) * F.col("n_queries")),
+            6,
+        ).alias("recall_at_5"),
+    )
+
+
 @query(
     "sim_recall_multiprobe",
     oracle=_COSINE_ORACLE_CORE
@@ -289,38 +333,14 @@ def sim_recall_multiprobe(spark, sf_dir):
     """
     from .pipeline_queries import sim_ann_ivf_trained
 
-    exact5 = (
-        sim_topk_cosine(spark, sf_dir)
-        .filter(F.col("rnk") <= 5)
-        .select("vec_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    e = _embs(spark, sf_dir)
-    n_queries = e.select("vec_id").distinct().count()
-    rows = []
-    for nprobe, builder in (
-        (1, sim_ann_ivf_trained),
-        (2, sim_ann_ivf_multiprobe),
-    ):
-        n_hits = (
-            builder(spark, sf_dir)
-            .select("vec_id", "neighbor_id")
-            .join(exact5, ["vec_id", "neighbor_id"])
-            .count()
-        )
-        rows.append((nprobe, n_queries, n_hits))
-    out = spark.createDataFrame(
-        rows, "nprobe long, n_queries long, n_hits long"
-    )
-    return out.select(
-        "nprobe",
-        "n_queries",
-        "n_hits",
-        E.round_to(
-            F.col("n_hits").cast("double")
-            / (F.lit(5) * F.col("n_queries")),
-            6,
-        ).alias("recall_at_5"),
+    return _recall_at5(
+        "nprobe long",
+        [
+            ((1,), sim_ann_ivf_trained(spark, sf_dir)),
+            ((2,), sim_ann_ivf_multiprobe(spark, sf_dir)),
+        ],
+        sim_topk_cosine(spark, sf_dir),
+        _embs(spark, sf_dir),
     )
 
 
@@ -374,7 +394,7 @@ def sample_curriculum_order(spark, sf_dir):
     kept = quality_logreg_score(spark, sf_dir).filter(F.col("keep")).select(
         "doc_id", "quality_logit"
     )
-    n = kept.count()
+    n = scalar_anchor(kept, F.count("*"), 0)
     ranked = E.with_global_rank(
         kept,
         order=[F.desc("quality_logit"), F.asc("doc_id")],
@@ -1243,7 +1263,7 @@ def sim_ann_ivfpq_scaled_k(spark, sf_dir):
     that dial.
     """
     u = _unit_embs(_embs(spark, sf_dir))
-    k = _scaled_coarse_k(u.count())
+    k = _scaled_coarse_k(scalar_anchor(u, F.count("*"), 0))
     return _ivfpq_top5(
         u,
         subspaces=NPQ_SUBSPACES,
@@ -1408,7 +1428,7 @@ NB_TOP_K = 50   # merge-table-style trained artifact: top discriminators
 # Trained-artifact memo: {(applicationId, sf_dir): (frame, P, N)} — the
 # fastText/CCNet-style quality filter is trained ONCE per (session,
 # corpus) and every consumer (the trainer view, the scorer) reuses the
-# same localCheckpointed log-odds frame, the ``_BPE_TRAINED`` pattern
+# same lineage-cut log-odds frame, the ``_BPE_TRAINED`` pattern
 # (VERDICT r9 #4: a trained artifact is not a per-query recomputation).
 _NB_TRAINED: dict = {}
 _NB_TRAIN_RUNS = 0  # memo misses, observable by tests
@@ -1454,13 +1474,12 @@ def _nb_llr_frame(spark, sf_dir):
     per-token Laplace log-likelihood ratio
     ln((pos_df+1)/(P+2)) − ln((neg_df+1)/(N+2)) quantized to integer
     micro-nats (the ``dsir_importance_weights`` technique, same 1-ULP
-    ``ln`` caveat).  Returns (localCheckpointed frame, P, N).
+    ``ln`` caveat).  Returns (lineage-cut frame, P, N).
 
     Scale: one explode (map-side), one map-combinable groupBy(token);
     the class totals are 1-row scalar anchors; nothing all-pairs and
     the feature table is vocabulary-sized (df ≥ {NB_MIN_DF} trimmed).
     """
-    from ..io import scalar_anchor
     from .curation import quality_logreg_score
 
     memo_key = (spark.sparkContext.applicationId, sf_dir)
@@ -1497,9 +1516,10 @@ def _nb_llr_frame(spark, sf_dir):
     ) - F.log(
         (F.col("neg_df") + 1).cast("double") / F.lit(float(n_cnt + 2))
     )
-    frame = pt.withColumn(
-        "llr_micro", F.floor(llr * 1000000).cast("long")
-    ).localCheckpoint()
+    frame = MZ.cut(
+        pt.withColumn("llr_micro", F.floor(llr * 1000000).cast("long")),
+        "nb_train",
+    )
     _NB_TRAINED[memo_key] = (frame, p_cnt, n_cnt)
     return frame, p_cnt, n_cnt
 
@@ -2509,32 +2529,10 @@ def sim_recall_ivfpq(spark, sf_dir):
     """
     from .pipeline_queries import sim_topk_cosine
 
-    exact = sim_topk_cosine(spark, sf_dir)
-    exact5 = (
-        exact.filter(F.col("rnk") <= 5)
-        .select("vec_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    n_queries = exact.select("vec_id").distinct().count()
-    n_hits = (
-        sim_ann_ivfpq(spark, sf_dir)
-        .select("vec_id", "neighbor_id")
-        .join(exact5, ["vec_id", "neighbor_id"])
-        .count()
-    )
-    out = spark.createDataFrame(
-        [("ivfpq", n_queries, n_hits)],
-        "method string, n_queries long, n_hits long",
-    )
-    return out.select(
-        "method",
-        "n_queries",
-        "n_hits",
-        E.round_to(
-            F.col("n_hits").cast("double")
-            / (F.lit(5) * F.col("n_queries")),
-            6,
-        ).alias("recall_at_5"),
+    return _recall_at5(
+        "method string",
+        [(("ivfpq",), sim_ann_ivfpq(spark, sf_dir))],
+        sim_topk_cosine(spark, sf_dir),
     )
 
 
@@ -2668,11 +2666,11 @@ def sim_recall_clustered(spark, sf_dir):
     derived corpus.  Scale: the derivation is one map-side transform;
     index builds and the evaluation joins are the verified builders'
     shapes unchanged (``_ivf_probe_frame`` persisted once and shared
-    by both probe depths; ADC stack via ``_ivfpq_top5``); the only
-    driver traffic is the bounded per-variant hit counts.
+    by both probe depths; ADC stack via ``_ivfpq_top5``); the report
+    itself is one lazy aggregate (``_recall_at5``).
     """
     ce = _clustered_embs(spark, sf_dir)
-    return _recall_report(spark, ce, with_demo_ivfpq=True)
+    return _recall_report(ce, with_demo_ivfpq=True)
 
 
 def _deployment_pq_top5(ce, scaled_k: bool = False):
@@ -2689,59 +2687,37 @@ def _deployment_pq_top5(ce, scaled_k: bool = False):
         pq_k=NPQ_K,
         nprobe=NPQ_NPROBE,
         rerank=NPQ_RERANK,
-        coarse_k=_scaled_coarse_k(u.count()) if scaled_k else 8,
+        coarse_k=_scaled_coarse_k(scalar_anchor(u, F.count("*"), 0))
+        if scaled_k
+        else 8,
     )
 
 
-def _recall_report(spark, ce, with_demo_ivfpq: bool):
+def _recall_report(ce, with_demo_ivfpq: bool):
     """Shared recall@5 report over a derived corpus ``ce``: trained
     IVF at probe depths 1 and 2, optionally the demo IVFPQ, and the
     deployment IVFPQ at BOTH coarse dials (fixed k=8 and the
     corpus-scaled k — the recall-gated rows, ≥ 0.8 in
     ``tests/test_training_ops.py``), each hits@5 against the exact
-    brute-force top-5 of the SAME corpus.  The only driver traffic is
-    the bounded per-variant hit counts."""
-    exact5 = (
-        P.topk_cosine_blocked(ce, k=10)
-        .filter(F.col("rnk") <= 5)
-        .select("vec_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    n_queries = exact5.select("vec_id").distinct().count()
+    brute-force top-5 of the SAME corpus, as one lazy report
+    (``_recall_at5``)."""
     ep = _ivf_probe_frame(ce)
     variants = [
-        ("ivf", 1, _ivf_top5(ep, max_probe=1)),
-        ("ivf", 2, _ivf_top5(ep, max_probe=2)),
+        (("ivf", 1), _ivf_top5(ep, max_probe=1)),
+        (("ivf", 2), _ivf_top5(ep, max_probe=2)),
     ]
     if with_demo_ivfpq:
         variants.append(
-            ("ivfpq", 1, _ivfpq_top5(ce.filter(P.finite_vec("embedding"))))
+            (("ivfpq", 1), _ivfpq_top5(ce.filter(P.finite_vec("embedding"))))
         )
-    variants.append(("ivfpq_norm", NPQ_NPROBE, _deployment_pq_top5(ce)))
+    variants.append((("ivfpq_norm", NPQ_NPROBE), _deployment_pq_top5(ce)))
     variants.append(
-        ("ivfpq_scaled", NPQ_NPROBE, _deployment_pq_top5(ce, scaled_k=True))
+        (("ivfpq_scaled", NPQ_NPROBE), _deployment_pq_top5(ce, scaled_k=True))
     )
-    rows = []
-    for variant, nprobe, top5 in variants:
-        n_hits = (
-            top5.select("vec_id", "neighbor_id")
-            .join(exact5, ["vec_id", "neighbor_id"])
-            .count()
-        )
-        rows.append((variant, nprobe, n_queries, n_hits))
-    out = spark.createDataFrame(
-        rows, "variant string, nprobe long, n_queries long, n_hits long"
-    )
-    return out.select(
-        "variant",
-        "nprobe",
-        "n_queries",
-        "n_hits",
-        E.round_to(
-            F.col("n_hits").cast("double")
-            / (F.lit(5) * F.col("n_queries")),
-            6,
-        ).alias("recall_at_5"),
+    return _recall_at5(
+        "variant string, nprobe long",
+        variants,
+        P.topk_cosine_blocked(ce, k=10),
     )
 
 
@@ -2840,10 +2816,10 @@ def sim_recall_clustered_skewed(spark, sf_dir):
     and the dedup pair-recall dial on the same geometry).
 
     Scale: identical shapes to the geometry-#1 report — one map-side
-    corpus derivation, the verified builders unchanged, bounded hit
-    counts as the only driver traffic.
+    corpus derivation, the verified builders unchanged, one lazy
+    report aggregate.
     """
-    return _recall_report(spark, _skewed_embs(spark, sf_dir), with_demo_ivfpq=False)
+    return _recall_report(_skewed_embs(spark, sf_dir), with_demo_ivfpq=False)
 
 
 # ---------------------------------------------------------------------------
@@ -3109,7 +3085,7 @@ def doc_pagerank_winnow(spark, sf_dir):
     ).unionByName(
         wm.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    edges = edges.localCheckpoint()  # reused by both iterations
+    edges = MZ.cut(edges, "pagerank_edges")  # reused by both iterations
     deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3141,7 +3117,7 @@ def doc_pagerank_winnow(spark, sf_dir):
         )
 
     pr0 = docs.select("doc_id", F.lit(PR_BASE).alias("pr"))
-    pr1 = _iterate(pr0).localCheckpoint()
+    pr1 = MZ.cut(_iterate(pr0), "pagerank_round")
     pr2 = _iterate(pr1)
     return (
         docs.join(
@@ -3261,7 +3237,7 @@ def emb_pca_power_iteration(spark, sf_dir):
     generically non-orthogonal to the top eigenvector.
     """
     dec = "decimal(38,0)"
-    q = (
+    q = MZ.cut(
         _embs(spark, sf_dir)
         .filter(P.finite_vec("embedding"))
         .select(
@@ -3270,14 +3246,14 @@ def emb_pca_power_iteration(spark, sf_dir):
                 "embedding",
                 lambda x: F.floor(x.cast("double") * 1e6).cast("long"),
             ).alias("qv"),
-        )
-        .localCheckpoint()
+        ),
+        "pca_input",
     )
-    mu = (
+    mu = MZ.rows(
         q.select(F.posexplode("qv").alias("i", "v"))
         .groupBy("i")
-        .agg(F.expr("CAST(sum(v) AS BIGINT) DIV count(*)").alias("mean_q"))
-        .collect()
+        .agg(F.expr("CAST(sum(v) AS BIGINT) DIV count(*)").alias("mean_q")),
+        "pca_mean",
     )
     if not mu:
         return spark.createDataFrame(
@@ -3287,10 +3263,13 @@ def emb_pca_power_iteration(spark, sf_dir):
     for r in mu:
         means[r["i"]] = int(r["mean_q"])
     mean_lit = F.array(*[F.lit(m) for m in means])
-    cell = q.select(
-        "vec_id",
-        F.zip_with("qv", mean_lit, lambda a, b: a - b).alias("x"),
-    ).localCheckpoint()
+    cell = MZ.cut(
+        q.select(
+            "vec_id",
+            F.zip_with("qv", mean_lit, lambda a, b: a - b).alias("x"),
+        ),
+        "pca_input",
+    )
 
     v = [1_000_000] * PCA_DIMS
     for _ in range(PCA_ROUNDS):
@@ -3304,17 +3283,15 @@ def emb_pca_power_iteration(spark, sf_dir):
                 " DIV 1000000"
             ).alias("s"),
         )
-        w_rows = (
+        w_rows = MZ.rows(
             cell.join(s, "vec_id")
             .select(
                 F.posexplode("x").alias("i", "xv"),
                 F.col("s"),
             )
             .groupBy("i")
-            .agg(
-                F.sum((F.col("s") * F.col("xv")).cast(dec)).alias("w")
-            )
-            .collect()
+            .agg(F.sum((F.col("s") * F.col("xv")).cast(dec)).alias("w")),
+            "pca_round",
         )
         w = [0] * PCA_DIMS
         for r in w_rows:

@@ -36,6 +36,7 @@ from collections.abc import Iterable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import materialize as MZ
 from .registry import MODELS, Model, ModelContext, topo_sort
 
 
@@ -49,8 +50,8 @@ class Runner:
     sources:    ``{(source_name, table): DataFrame}`` raw inputs.
     run_date:   frozen "today" (never ``current_date()`` — SURVEY §7).
     warehouse:  directory for incremental table storage.  ``None`` →
-                incremental models stay unexecuted DataFrames (pure
-                build mode: what the driver's correctness queries use).
+                incremental models stay unexecuted DataFrames (what
+                the driver's correctness queries use).
     """
 
     def __init__(
@@ -104,21 +105,23 @@ class Runner:
 
         - ``"persist"`` (default) — mark intermediates MEMORY_AND_DISK;
           one downstream action computes each shared stage once and
-          every other consumer reads the cache.  Lazy: pure build mode
-          still never triggers a job.  ~1.6× on the full-dashboard
+          every other consumer reads the cache.  Lazy: no job runs
+          until the caller's action.  ~1.6× on the full-dashboard
           build at sf0.1.
-        - ``"checkpoint"`` — eager ``localCheckpoint``: also CUTS
-          LINEAGE, so Catalyst stops re-analyzing the huge inlined
-          upstream plans (analysis time dominates small-data DAG runs).
-          Triggers a job per model — only for interactive/production
-          runs, never pure build mode.  Materialization is
+        - ``"checkpoint"`` — an eager ``materialize.cut`` per
+          intermediate model (reason ``model:<name>``; reliable files
+          on a durable checkpoint dir, ``localCheckpoint`` otherwise):
+          also CUTS LINEAGE, so Catalyst stops re-analyzing the huge
+          inlined upstream plans (analysis time dominates small-data
+          DAG runs).  One job per cut model.  Materialization is
           DEPENDENCY-DRIVEN (one future per model, blocking only on
           its own refs — see ``_run_pipelined``): the
           streams→vod→dashboard critical chain advances the moment
           each link's upstreams finish instead of waiting for a level
           barrier's stragglers — measured 8.6 s → 6.3 s on the
           full-dashboard build at sf0.1.
-        - ``None`` — raw unexecuted DataFrames (plan-inspection mode).
+        - ``None`` — raw unexecuted DataFrames (pure build mode: every
+          registered model builds without running a Spark job).
 
         SOURCE-LEVEL models (no refs — the ``select *`` passthrough
         views over one parquet table) are never materialized in either
@@ -179,7 +182,7 @@ class Runner:
                 return self._insert_overwrite(m, df)
             if sel is not None and m.name not in sel and m.refs:
                 # Source passthroughs (no refs) stay lazy: see run().
-                return df.localCheckpoint(eager=True)
+                return MZ.cut(df, f"model:{m.name}")
             return df
 
         with ThreadPoolExecutor(8) as ex:

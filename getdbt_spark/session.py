@@ -83,7 +83,8 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def durable_checkpoints(spark: SparkSession) -> bool:
-    """Should iterative operators cut lineage with RELIABLE checkpoints?
+    """Should lineage cuts (``materialize.cut``, this function's one
+    caller) write RELIABLE checkpoint files?
 
     True only when the deployment configured a durable checkpoint dir
     (HDFS/object store on a cluster) BEFORE calling in, or when
@@ -107,9 +108,9 @@ def durable_checkpoints(spark: SparkSession) -> bool:
 def ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Set a reliable-checkpoint dir if the deployment didn't.
 
-    Iterative operators (connected components) cut lineage with
-    ``df.checkpoint()`` — RELIABLE checkpoints, because
-    ``localCheckpoint`` stores blocks on executors and an executor
+    Durable lineage cuts (``materialize.cut``) write RELIABLE
+    checkpoint files, because a local checkpoint stores blocks on
+    executors and an executor
     loss mid-iteration would force recomputing from nothing (round N
     has no lineage back to the source).  On a cluster the conf should
     point at durable storage (HDFS/object store); locally a per-
@@ -122,8 +123,8 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
         # Prefer RAM-backed tmpfs for the single-host default: the
         # checkpoint write is pure durability bookkeeping locally, and
         # disk-backed /tmp adds seconds of IO variance to iterative
-        # operators (connected components writes one edge set per two
-        # rounds).  A cluster deployment sets its own durable dir
+        # operators (connected components writes one edge set per
+        # round).  A cluster deployment sets its own durable dir
         # (HDFS/object store) BEFORE calling in, which this respects.
         # tmpfs is often size-capped in containers (64 MB mounts are
         # common), so only use it with >=2 GiB free; GETDBT_SPARK_CKPT_DIR

@@ -551,14 +551,15 @@ def test_round_to_passes_nonfinite_and_huge_through(spark):
 
 
 def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
-    """Two threads racing one slice-offset helper frame (a realistic
-    multi-query cluster session) must read ONE materialization of the
-    kernel output: identical results, no deadlock, and no job that
+    """Two threads racing one lazily cut frame — ``materialize.cut(
+    eager=False)`` directly, and the slice-offset helpers built on it
+    (a realistic multi-query cluster session) — must read ONE
+    materialization: identical results, no deadlock, and no job that
     re-derives the range-shuffle lineage (VERDICT r11 #8).
 
-    The probe: ``_lazy_cut``'s checkpoint materializes during helper
-    CONSTRUCTION (the per-slice counts pass is the first consuming
-    action), so every post-build job reads checkpoint blocks and its
+    The probe: the lazy cut materializes on its first consuming action
+    (for the helpers, the per-slice counts pass during helper
+    CONSTRUCTION), so every later job reads checkpoint blocks and its
     stage DAG is truncated at the CheckpointRDD — a sequential
     post-build action measures that stage budget, and a concurrent
     job exceeding it means the lineage (range exchange + Arrow
@@ -568,13 +569,23 @@ def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
     from pyspark.sql import functions as F
 
     from getdbt_spark import functions as E
+    from getdbt_spark import materialize as MZ
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     base = spark.range(0, 50_000).select(
         "id", (F.col("id") % 7).alias("grp"), (F.col("id") % 13).alias("w")
     )
+    # uuid() differs on every evaluation: a recomputed lineage would
+    # hand the racing consumers different rows
+    cut = MZ.cut(
+        base.repartitionByRange(4, "id").withColumn("u", F.uuid()),
+        "test",
+        eager=False,
+    )
+    cut.count()  # the first consuming action materializes it
     frames = {
+        "cut": cut,
         "rank": E.with_global_rank(base, order=[F.asc("id")], rank_col="r"),
         "gcum": E.with_grouped_global_cumsum(
             base, group="grp", order=[F.asc("id")], weight="w",

@@ -730,14 +730,14 @@ def test_kernel_stage_stats_correct_after_materialization(spark):
     """Pins the r9 sf10 broadcast-OOM mechanism: Catalyst sizes an
     Arrow-kernel output from its INPUT columns (blind to the kernel's
     expansion factor), so a data-sized frame can look broadcastable;
-    after ``_plan_with_real_stats`` the estimate must be the measured
+    after ``materialize.measure`` the estimate must be the measured
     cached size — orders of magnitude larger for an expanding kernel —
     which is what flips downstream joins from broadcast to shuffle at
     scale."""
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F811
 
-    from getdbt_spark.pipeline import _plan_with_real_stats
+    from getdbt_spark.materialize import measure
 
     df = spark.range(20_000).select(F.col("id"), F.lit("xy").alias("t"))
 
@@ -747,7 +747,7 @@ def test_kernel_stage_stats_correct_after_materialization(spark):
                 {"id": pdf["id"], "payload": ["z" * 2000] * len(pdf)}
             )
 
-    big = df.mapInPandas(expand, "id long, payload string").persist()
+    big = df.mapInPandas(expand, "id long, payload string")
 
     def est():
         # a FRESH derived frame each time — downstream consumers (the
@@ -759,7 +759,7 @@ def test_kernel_stage_stats_correct_after_materialization(spark):
         )
 
     before = est()
-    _plan_with_real_stats(big)
+    big = measure(big, "test")
     after = est()
     big.unpersist()
     # true size ~40 MB; the input-derived estimate is a tiny fraction
