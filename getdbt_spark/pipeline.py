@@ -10,21 +10,24 @@ large-scale training-data pipeline needs, built Spark-first —
   verify), SimHash fingerprints, embedding-cosine near-dup.
 - **Similarity search**: exact cosine top-k as a distributed block
   matrix product and two bucketed 100 TB scale paths — IVF (centroid
-  assignment) and random-hyperplane LSH (no centroid fit).
+  assignment) and random-hyperplane LSH (no centroid fit).  Every
+  embedding-pair search, top-k or threshold, runs on ONE block
+  kernel (``bucketed_topk_cosine`` / ``bucketed_cosine_pairs``).
 - **Text analysis**: quality scoring, language-ID heuristic, token
   statistics, document fingerprinting.
 - **Multimodal columns**: binary payload + typed metadata, decoded
   by a stub kernel.
 
 Relational and per-row work is JVM-side Column expressions
-(``transform``/``zip_with``/``aggregate`` higher-order functions), so
-whole-stage codegen covers it.  Work that vectorizes in numpy but not
-in Catalyst runs as a Python kernel, and every such kernel has ONE
-style: Arrow record batches in and out (``F.arrow_udf``,
-``mapInArrow``, ``applyInArrow``), with its batch glue taken from
-``kernels`` — shingles + MinHash signatures, SimHash, block cosine
-top-k, PQ training/assignment/lookup tables, FFD packing, zlib
-compression ratio and the multimodal stubs.
+(``transform``/``aggregate`` higher-order functions: vector norms,
+LSH hyperplane bits, the centroid assignment), so whole-stage codegen
+covers it.  Work that vectorizes in numpy but not in Catalyst runs as
+a Python kernel, and every such kernel has ONE style: Arrow record
+batches in and out (``F.arrow_udf``, ``mapInArrow``,
+``applyInArrow``), with its batch glue taken from ``kernels`` —
+shingles + MinHash signatures, SimHash, block cosine scoring, PQ
+training/assignment/lookup tables, FFD packing, zlib compression
+ratio and the multimodal stubs.
 
 Scale design notes (local[32] tests ≠ the target; a 1000-executor
 cluster reading 100 TB is):
@@ -614,11 +617,12 @@ def with_norm(embs: DataFrame) -> DataFrame:
 
 
 def cosine(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Column:
-    """NULL on any undefined side: zero-norm (try_divide's 0/0 → NULL,
-    the `zerovec` find) and non-finite components (dot or norm NaN/Inf
-    → NaN result, the `nanvec` find — Spark and DuckDB both rank a
-    raw NaN FIRST under DESC, so a corrupt vector would top every
-    similarity list).  ANSI `/` would abort the whole job instead.
+    """Per-row cosine fold for ``assign_nearest_cosine`` (pair searches
+    score in the block kernel).  NULL on any undefined side: zero-norm
+    (try_divide's 0/0 → NULL, the `zerovec` find) and non-finite
+    components (dot or norm NaN/Inf → NaN result, the `nanvec` find —
+    Spark and DuckDB both rank a raw NaN FIRST under DESC, so a
+    corrupt vector would top every similarity list).  ANSI `/` would abort the whole job instead.
     NULL is the right engineering outcome: a NULL score never passes
     a threshold filter and ranks after every real score under DESC
     NULLS LAST (both engines' default).  The oracle core applies the
@@ -678,30 +682,72 @@ def assign_nearest_cosine(e: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
+def _vectors(col: pa.Array | pa.ChunkedArray) -> dict:
+    """``{width: (rows, (n, width) float64 matrix)}`` of an embedding
+    column, its rows grouped by length.  A NULL element reads as NaN
+    and a NULL row joins no group, so such a vector scores NaN (emitted
+    NULL) like any other corrupt vector, and so does a pair of
+    different-width vectors: the per-pair fold's semantics, where
+    ``kernels.list_matrix`` refuses all three."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    n = np.where(valid, np.diff(np.asarray(col.offsets)), -1)
+    # .flatten() honours the slice and skips NULL rows' values
+    flat = (
+        col.flatten()
+        .fill_null(float("nan"))
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+    )
+    start = np.cumsum(np.maximum(n, 0)) - np.maximum(n, 0)
+    out = {}
+    for w in np.unique(n[valid]):
+        rows = np.nonzero(n == w)[0]
+        out[int(w)] = rows, flat[start[rows, None] + np.arange(w)]
+    return out
+
+
+def _block_cosine(left: pa.Table, right: pa.Table) -> tuple:
+    """``(query ids, index ids, scores)`` of one block: the dense
+    ``Q @ M.T / (|q| |m|)`` per shared vector width, with float→double
+    promotion, NaN wherever a side is zero-norm or corrupt or the two
+    widths differ."""
+    q = _vectors(left.column("embedding"))
+    m = _vectors(right.column("embedding"))
+    scores = np.full((left.num_rows, right.num_rows), np.nan)
+    for w in q.keys() & m.keys():
+        (qi, qv), (mi, mv) = q[w], m[w]
+        q_norm = np.sqrt((qv * qv).sum(axis=1))
+        m_norm = np.sqrt((mv * mv).sum(axis=1))
+        with np.errstate(invalid="ignore"):  # zero-norm 0/0 → NaN
+            block = (qv @ mv.T) / (q_norm[:, None] * m_norm[None, :])
+        if block.shape == scores.shape:  # one width: every row
+            scores = block
+        else:
+            scores[np.ix_(qi, mi)] = block
+    return (
+        left.column("vec_id").to_numpy(),
+        right.column("vec_id").to_numpy(),
+        scores,
+    )
+
+
 def _block_topk_fn(k: int):
-    """Per-block cosine top-``k`` kernel for ``bucketed_topk_cosine``:
-    dense numpy ``Q @ M.T`` over one (query-chunk, index-shard) block,
-    per-query top-k candidates by (score DESC, neighbor_id ASC) with
-    NaN scores ordered LAST and emitted as NULL.
+    """Per-block selector: each query's top-``k`` candidates by
+    (score DESC, neighbor_id ASC), self excluded, NaN scores ordered
+    LAST and emitted as NULL.
 
     The per-block lexsort applies the SAME total order as the global
-    fold window (reals DESC, then NaN/NULL by ascending neighbor_id —
+    window (reals DESC, then NaN/NULL by ascending neighbor_id —
     numpy sorts NaN after every real and lexsort's stability preserves
     the id-ascending secondary among them), so the union of per-block
     top-ks is a superset of the global top-k INCLUDING the
-    corrupt-vector NULL semantics."""
+    corrupt-vector NULL semantics.  NULL, not NaN, because Spark sorts
+    NaN FIRST under DESC while the DuckDB oracle's NULL-on-zero-divide
+    sorts last (the `zerovec` random-corpus find)."""
 
-    def _block_topk(left: pa.Table, right: pa.Table) -> list:
-        if not left.num_rows or not right.num_rows:
-            return [[], [], []]
-        q = K.list_matrix(left.column("embedding"), np.float64)
-        m = K.list_matrix(right.column("embedding"), np.float64)
-        q_ids = left.column("vec_id").to_numpy()
-        i_ids = right.column("vec_id").to_numpy()
-        q_norm = np.sqrt((q * q).sum(axis=1))
-        m_norm = np.sqrt((m * m).sum(axis=1))
-        with np.errstate(invalid="ignore"):  # zero-norm 0/0 → NaN→NULL below
-            scores = (q @ m.T) / (q_norm[:, None] * m_norm[None, :])
+    def _block_topk(q_ids, i_ids, scores) -> list:
         # one lexsort per block: self pairs last, then desc score (NaN
         # last), then id asc — self is dropped from the first k below
         is_self = i_ids[None, :] == q_ids[:, None]
@@ -709,16 +755,6 @@ def _block_topk_fn(k: int):
         top = np.lexsort((ids, -scores, is_self), axis=1)[:, :k]
         keep = ~np.take_along_axis(is_self, top, axis=1)
         c = np.take_along_axis(scores, top, axis=1)[keep]
-        # A zero-norm (corrupt) vector makes the 0/0 above a NaN — but
-        # Spark sorts NaN FIRST under desc (NaN > +Inf) while the
-        # DuckDB oracle's NULL-on-zero-divide sorts last, so a corrupt
-        # vector would silently WIN the global ranking.  Emit NULL at
-        # the source so the window ranks it DESC-NULLS-LAST like the
-        # oracle; the lexsort above already places NaN last,
-        # consistently.  (Found by the `zerovec` random-corpus
-        # variant.  Not a nanvl projection on the cogroup output: a
-        # Project directly atop the cogroup mis-prunes the right
-        # group's input columns down to the grouping key in Spark 4.1.)
         return [
             np.broadcast_to(q_ids[:, None], top.shape)[keep],
             i_ids[top][keep],
@@ -728,45 +764,48 @@ def _block_topk_fn(k: int):
     return _block_topk
 
 
-def bucketed_topk_cosine(
+def _block_pairs_fn(tau: float):
+    """Per-block selector: every ``a_id < b_id`` pair whose score
+    could round to ≥ ``tau`` (a 1e-6 margin below it; the exact
+    ``round_to`` test runs in Spark).  NaN never compares ≥, so a
+    corrupt or zero-norm vector has no pairs."""
+
+    def _block_pairs(q_ids, i_ids, scores) -> list:
+        a, b = np.nonzero(
+            (q_ids[:, None] < i_ids[None, :]) & (scores >= tau - 1e-6)
+        )
+        return [q_ids[a], i_ids[b], scores[a, b]]
+
+    return _block_pairs
+
+
+def _cosine_blocks(
     ea: DataFrame,
-    k: int = 5,
-    index_shards: int = 4,
-    query_chunks: int = 4,
-    bucket: str = "cent_id",
+    queries: DataFrame | None,
+    select,
+    index_shards: int,
+    query_chunks: int,
+    bucket: str | None,
 ) -> DataFrame:
-    """Within-bucket exact cosine top-``k`` as per-bucket block matrix
-    products: ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked by
-    (cosine DESC NULLS LAST, neighbor_id), cosine rounded to 1e-6
-    AFTER the global rank — the IVF/ANN in-bucket search shared by
-    ``sim_ann_ivf`` and ``sim_ann_ivf_trained``, and the whole-corpus
-    search of ``topk_cosine_blocked`` (one constant bucket).
+    """``(vec_id, neighbor_id, c)`` rows that ``select`` picks from the
+    ``_block_cosine`` scores of every within-bucket (query, index)
+    block: the one block layout of ``bucketed_topk_cosine`` and
+    ``bucketed_cosine_pairs``.
 
-    Block layout, with NO driver materialization anywhere: within each
-    bucket the index side is hash-sharded on ``vec_id % index_shards``,
-    the query side on ``vec_id % query_chunks``, each side replicated
-    across the other's blocks (query rows ×shards, index rows ×chunks
-    — the standard block nested-loop layout), and every
+    Within each bucket the index side (``ea``) is hash-sharded on
+    ``vec_id % index_shards``, the query side (``queries``, default
+    ``ea``) on ``vec_id % query_chunks``, each side replicated across
+    the other's blocks (query rows ×shards, index rows ×chunks — the
+    standard block nested-loop layout), and every
     ``(bucket, chunk, shard)`` block meets in one cogroup
-    ``applyInArrow`` task that runs a dense numpy ``Q @ M.T``
-    (``_block_topk_fn``).  Per-block per-query top-k candidates then
-    fold into the global top-k through one window over ≤ k×shards rows
-    per query — correct because a global top-k is always a subset of
-    the union of per-shard top-ks.  Vector bytes cross the exchange
-    once per replication constant, never per pair, and both
-    replication factors are plan constants, so Catalyst sizes the
-    shuffle correctly.
-
-    Scoring mirrors the DuckDB oracle — ``dot / (norm_a · norm_b)``
-    with float→double promotion before the multiply, then
-    round_to(…, 6) AFTER the global rank — so value hashes match
-    (matmul's blocked summation differs from a sequential fold only at
-    ~1e-16, far inside the 1e-6 rounding grid; rank ties break on
-    neighbor_id exactly like the oracle's ``ORDER BY c DESC,
-    neighbor_id``).  The NaN→NULL corrupt-vector semantics are the
-    kernel's."""
-    from pyspark.sql import Window
-
+    ``applyInArrow`` task that runs one dense numpy ``Q @ M.T``.
+    Vector bytes cross the exchange once per replication constant,
+    never per pair, and both factors are plan constants, so Catalyst
+    sizes the shuffle correctly; nothing touches the driver.  A query
+    frame may carry a vector in several buckets (IVF multiprobe, LSH
+    bit-flip probing) while the index keeps each vector in one, so no
+    pair is scored twice.  A NULL bucket matches nothing, as in an
+    equi-join; ``bucket=None`` puts every vector in one bucket."""
     # The cogroup keys MUST have identical types on both sides:
     # pmod(bigint, int) is BIGINT while explode(sequence(int, int)) is
     # INT, and Spark's HashPartitioning hash is TYPE-SENSITIVE
@@ -776,33 +815,83 @@ def bucketed_topk_cosine(
     # AQE coalesces small shuffles to few partitions where the
     # sort-merge still pairs them, then detonates as data grows (6/16
     # blocks at sf0.1, 0/16 at sf1 → zero output).  Pinned by
-    # test_pipeline.  Each side projects the bucket alias FRESH from
-    # ``ea`` (a shared aliased attribute on both cogroup sides trips
-    # the ambiguous-self-join check).
-    qs = ea.select(
-        F.col(bucket).alias("__b"),
-        F.pmod("vec_id", F.lit(query_chunks)).cast("int").alias("qc"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(index_shards - 1))
-        ).alias("shard"),
-        "vec_id",
-        "embedding",
+    # test_pipeline.  Every column is aliased FRESH per side: with
+    # attributes shared by both sides the cogroup's kernel references
+    # only one side's copies, so any projection above it prunes the
+    # other side's vectors away (and a shared key fails the
+    # ambiguous-self-join check).
+    def side(df, qc, shard):
+        if bucket is not None:
+            df = df.filter(F.col(bucket).isNotNull())
+        return df.select(
+            (F.lit(0) if bucket is None else F.col(bucket)).alias("__b"),
+            qc.alias("qc"),
+            shard.alias("shard"),
+            F.col("vec_id").alias("vec_id"),
+            F.col("embedding").alias("embedding"),
+        )
+
+    def spread_over(n):
+        return F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+
+    def shard_of(n):
+        return F.pmod("vec_id", F.lit(n)).cast("int")
+
+    qs = side(
+        ea if queries is None else queries,
+        shard_of(query_chunks),
+        spread_over(index_shards),
     )
-    ix = ea.select(
-        F.col(bucket).alias("__b"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(query_chunks - 1))
-        ).alias("qc"),
-        F.pmod("vec_id", F.lit(index_shards)).cast("int").alias("shard"),
-        "vec_id",
-        "embedding",
-    )
-    partial = K.apply_in_arrow(
+    ix = side(ea, spread_over(query_chunks), shard_of(index_shards))
+
+    def _block(left: pa.Table, right: pa.Table) -> list:
+        if not left.num_rows or not right.num_rows:
+            return [[], [], []]
+        return select(*_block_cosine(left, right))
+
+    return K.apply_in_arrow(
         qs.groupBy("__b", "qc", "shard").cogroup(
             ix.groupBy("__b", "qc", "shard")
         ),
-        _block_topk_fn(k),
+        _block,
         "vec_id long, neighbor_id long, c double",
+    )
+
+
+def bucketed_topk_cosine(
+    ea: DataFrame,
+    k: int = 5,
+    index_shards: int = 4,
+    query_chunks: int = 4,
+    bucket: str | None = "cent_id",
+    queries: DataFrame | None = None,
+) -> DataFrame:
+    """Within-bucket exact cosine top-``k`` of every query over the
+    index ``ea`` (``vec_id``, ``embedding``, ``bucket``):
+    ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked by (cosine DESC
+    NULLS LAST, neighbor_id), cosine rounded to 1e-6 AFTER the global
+    rank.  ``queries`` (default ``ea``) lets a query probe several
+    buckets; ``bucket=None`` is one bucket for all.  Callers:
+    ``topk_cosine_blocked`` (one bucket),
+    ``sim_ann_ivf``, ``sim_ann_ivf_trained``, ``sim_ann_lsh``,
+    ``sim_ann_lsh_multiprobe`` and ``training_ops._ivf_top5``.
+
+    Blocks as in ``_cosine_blocks``; per-block per-query top-k
+    candidates then fold into the global top-k through one window
+    over ≤ k×shards×probes rows per query — correct because a global
+    top-k is always a subset of the union of per-block top-ks.
+
+    Scoring mirrors the DuckDB oracle — ``dot / (norm_a · norm_b)``
+    with float→double promotion before the multiply, then
+    round_to(…, 6) AFTER the global rank — so value hashes match
+    (matmul's blocked summation differs from a sequential fold only at
+    ~1e-16, far inside the 1e-6 rounding grid; rank ties break on
+    neighbor_id exactly like the oracle's ``ORDER BY c DESC,
+    neighbor_id``)."""
+    from pyspark.sql import Window
+
+    partial = _cosine_blocks(
+        ea, queries, _block_topk_fn(k), index_shards, query_chunks, bucket
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("c").desc(), F.col("neighbor_id")
@@ -817,6 +906,25 @@ def bucketed_topk_cosine(
             E.round_to(F.col("c"), 6).alias("cos_sim"),
         )
     )
+
+
+def bucketed_cosine_pairs(
+    ea: DataFrame, tau: float, bucket: str | None = "cent_id"
+) -> DataFrame:
+    """Every within-bucket pair of ``ea`` whose cosine rounds to ≥
+    ``tau``: ``(a_id, b_id, cos_sim)`` with ``a_id < b_id`` and
+    ``cos_sim = round_to(c, 6)``; a NULL (corrupt or zero-norm) score
+    never passes.  A vector in several buckets yields a shared pair
+    once per shared bucket; ``bucket=None`` is one bucket for all.
+    Callers: ``_emb_exact_pairs`` (one bucket),
+    ``dedup_embedding_cluster_ivf``,
+    ``_probe_cell_pairs`` and the SemDeDup domination pass."""
+    partial = _cosine_blocks(ea, None, _block_pairs_fn(tau), 4, 4, bucket)
+    return partial.select(
+        F.col("vec_id").alias("a_id"),
+        F.col("neighbor_id").alias("b_id"),
+        E.round_to(F.col("c"), 6).alias("cos_sim"),
+    ).filter(F.col("cos_sim") >= tau)
 
 
 def topk_cosine_blocked(
@@ -835,13 +943,7 @@ def topk_cosine_blocked(
     Q·S + I·Qc rows — the provably minimal replication for an exact
     all-pairs scan without a shared index.
     """
-    return bucketed_topk_cosine(
-        embs.select("vec_id", "embedding", F.lit(0).alias("__all")),
-        k,
-        index_shards,
-        query_chunks,
-        bucket="__all",
-    )
+    return bucketed_topk_cosine(embs, k, index_shards, query_chunks, None)
 
 
 # ---------------------------------------------------------------------------

@@ -42,19 +42,6 @@ BOUNDED_NLJ_ALLOW: dict[str, int] = {
     "sim_ann_ivf": 1,
     "emb_kmeans_train": 4,
     "sim_ann_ivf_trained": 4,  # embeds the k-means rounds
-    "sem_dedup_trained": 4,    # same embedded k-means rounds
-    # Same embedded k-means rounds, but the cell self-join's a/b
-    # branches BOTH consume the assignment frame, so the codebook
-    # subtree (and its NLJ nodes) prints again through the second
-    # branch of the lazy lineage: 4 + 3 deduplicated-by-reuse = 7
-    # observed, all k-row build sides by construction.
-    "dedup_embedding_cluster_ivf": 7,
-    "dedup_cluster_multiprobe": 7,  # same doubled codebook lineage
-    # Embedded k-means rounds whose subtree prints through BOTH the
-    # query-probe and index-placement branches of the lazy lineage
-    # (plus the shared final assignment): 11 nodes observed, every
-    # one the same k-row codebook build side by construction.
-    "sim_ann_ivf_multiprobe": 11,
     # M=4 independent subspace trainers × (2 rounds ×2 lineage dup):
     # 16 nodes, all K-row codebook build sides.
     "emb_pq_encode": 16,

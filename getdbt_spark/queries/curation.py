@@ -842,10 +842,11 @@ def sem_dedup(spark, sf_dir):
     changing the plan. The assignment is the round-13 MAP-ONLY
     broadcast-codebook fold (``pipeline.assign_nearest_cosine`` —
     no k-row fan-out, no ranking window, no join-back shuffle); the
-    within-cluster self-join shuffles on cent_id; the keep decision
-    is one anti-join shape (left join + null flag) on vec_id. At
-    100 TB the cluster count scales with the corpus so per-bucket
-    pair counts stay bounded — the paper's own scaling argument.
+    within-cluster pairs come from the block threshold search
+    (``_sem_dedup_verdict``); the keep decision is one anti-join
+    shape (left join + null flag) on vec_id.  At 100 TB the cluster
+    count scales with the corpus so per-bucket pair counts stay
+    bounded — the paper's own scaling argument.
     """
     e = P.with_norm(P.spread(_embs(spark, sf_dir)))
     cent = e.filter(F.col("vec_id") < 16).select(
@@ -853,30 +854,22 @@ def sem_dedup(spark, sf_dir):
         F.col("embedding").alias("cvec"),
         F.col("norm").alias("cnorm"),
     )
-    ee = P.assign_nearest_cosine(e, cent).persist()
-    a = ee.select(
-        "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
+    ee = MZ.cut(
+        P.assign_nearest_cosine(e, cent), "semdedup_assign", eager=False
     )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
+    return _sem_dedup_verdict(ee)
+
+
+def _sem_dedup_verdict(ee):
+    """SemDeDup's domination tail over a ``(vec_id, embedding,
+    cent_id)`` frame: a vector is dropped iff a lower-id vector of its
+    cluster scores ≥ ``SEMDEDUP_TAU`` against it, i.e. it is the
+    ``b_id`` of a within-cluster threshold pair
+    (``pipeline.bucketed_cosine_pairs``); keep = one left join + null
+    flag."""
     dominated = (
-        a.join(b, "cent_id")
-        .filter(F.col("neighbor_id") < F.col("vec_id"))
-        .select(
-            "vec_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-        .filter(E.round_to(F.col("c"), 6) >= SEMDEDUP_TAU)
-        .select("vec_id")
+        P.bucketed_cosine_pairs(ee, SEMDEDUP_TAU)
+        .select(F.col("b_id").alias("vec_id"))
         .distinct()
         .withColumn("dom", F.lit(1))
     )
@@ -958,50 +951,21 @@ def sem_dedup_trained(spark, sf_dir):
     The assignment trajectory is bit-reproducible (micro-unit BIGINT
     distances, floor-integer centroid means, id tie-breaks), so the
     DuckDB oracle replays the entire trainer with unrolled CTEs; the
-    cosine domination math is float but engine-identical (same
-    expression tree, rounded to 6 before the threshold).
+    cosine domination math is float, rounded to 6 before the threshold
+    (the block matmul differs from the oracle's fold only at ~1e-16).
 
     Plan shape: the k-row codebook fan-outs are the allow-listed
     bounded NLJ (BOUNDED_NLJ_ALLOW, embedded k-means rounds); the
-    domination self-join shuffles on cent_id; keep = one left join +
-    null flag.  Corrupt (non-finite / null-component) vectors train
-    nothing, get no cluster, and emit no verdict — oracle mirrors.
+    domination pass is ``sem_dedup``'s (``_sem_dedup_verdict``).
+    Corrupt (non-finite / null-component) vectors train nothing, get
+    no cluster, and emit no verdict — oracle mirrors.
     """
-    e = P.with_norm(_embs(spark, sf_dir))
+    e = _embs(spark, sf_dir)
     assign = P.kmeans_quantized(e, k=8, iters=2).select(
         "vec_id", F.col("cluster").alias("cent_id")
     )
-    ee = e.join(assign, "vec_id").persist()
-    a = ee.select(
-        "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    dominated = (
-        a.join(b, "cent_id")
-        .filter(F.col("neighbor_id") < F.col("vec_id"))
-        .select(
-            "vec_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-        .filter(E.round_to(F.col("c"), 6) >= SEMDEDUP_TAU)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dom", F.lit(1))
-    )
-    return (
-        ee.select("vec_id", "cent_id")
-        .join(dominated, "vec_id", "left")
-        .select("vec_id", "cent_id", F.col("dom").isNull().alias("is_kept"))
+    return _sem_dedup_verdict(
+        MZ.cut(e.join(assign, "vec_id"), "semdedup_assign", eager=False)
     )
 
 
@@ -1661,39 +1625,12 @@ def dedup_embedding_cluster_ivf(spark, sf_dir):
     Corrupt (non-finite) vectors get no cell and no verdict, exactly
     as in ``sem_dedup_trained``.
     """
-    e = P.with_norm(_embs(spark, sf_dir))
+    e = _embs(spark, sf_dir)
     assign = P.kmeans_quantized(e, k=8, iters=2).select(
         "vec_id", F.col("cluster").alias("cent_id")
     )
-    ee = e.join(assign, "vec_id").persist()
-    a = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, "cent_id")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-        .select("a_id", "b_id")
-    )
+    ee = MZ.cut(e.join(assign, "vec_id"), "ivf_assign", eager=False)
+    pairs = P.bucketed_cosine_pairs(ee, 0.45).select("a_id", "b_id")
     comp = P.connected_components(pairs)
     base = ee.select("vec_id")
     return (
@@ -1853,47 +1790,18 @@ _EXACT_PAIRS_SQL = """
 
 
 def _probe_cell_pairs(e, assign):
-    """Matched near-dup pairs among candidates sharing ANY probed cell:
-    join the (vec_id, cent_id) probe table to itself on cent_id,
-    de-duplicate candidates that share BOTH probed cells, then score
-    the survivors — cosine is evaluated once per DISTINCT candidate
-    pair, so multiprobe pays ≤ nprobe× the single-probe candidate
-    mass and never re-scores.  Scale shape: equi-joins on cent_id and
-    vec_id only (hash-partitionable), Σ|cell|² candidates, no
-    all-pairs anything."""
-    ax = assign.select(F.col("vec_id").alias("a_id"), "cent_id")
-    ay = assign.select(F.col("vec_id").alias("b_id"), "cent_id")
-    cand = (
-        ax.join(ay, "cent_id")
-        .filter(F.col("a_id") < F.col("b_id"))
+    """Matched near-dup pairs among vectors sharing ANY probed cell:
+    the threshold block search with every vector in each of its
+    probed cells (``assign``: one ``(vec_id, cent_id)`` row per
+    probe), then one distinct for the pairs that share several cells.
+    Multiprobe pays ≤ nprobe× the single-probe candidate mass.  Scale
+    shape: equi-joins on vec_id and per-cell blocks only,
+    Σ|cell|² candidates, no all-pairs anything."""
+    cells = e.select("vec_id", "embedding").join(assign, "vec_id")
+    return (
+        P.bucketed_cosine_pairs(cells, 0.45)
         .select("a_id", "b_id")
         .distinct()
-    )
-    ea = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        cand.join(ea, "a_id")
-        .join(eb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-        .select("a_id", "b_id")
     )
 
 
@@ -1972,7 +1880,7 @@ def _cluster_verdict(spark, sf_dir, nprobe: int, assign=None):
     the ContextCleaner once unreferenced, while a cached plan lives in
     the CacheManager for the session — three verdict invocations per
     recall run were leaking three assignment caches (ADVICE r11)."""
-    e = P.with_norm(_embs(spark, sf_dir))
+    e = _embs(spark, sf_dir)
     if assign is None:
         assign = MZ.cut(
             P.kmeans_probe_assign(e, k=8, iters=2, nprobe=nprobe).select(
@@ -2132,7 +2040,7 @@ def dedup_cluster_recall(spark, sf_dir):
         "recall_exact_pairs",
         eager=False,
     )
-    e = P.with_norm(_embs(spark, sf_dir))
+    e = _embs(spark, sf_dir)
 
     def co_pairs(verdict):
         a = verdict.select(F.col("vec_id").alias("a_id"), "canonical_id")

@@ -401,9 +401,7 @@ def sim_ann_ivf(spark, sf_dir):
     # (Spark 4.1 has no dedup path for cogroup children, so the un-cut
     # plan fails analysis outright).  The in-bucket search is the shared
     # block-matmul kernel (pipeline.bucketed_topk_cosine): one dense
-    # numpy product per (bucket, chunk, shard) block instead of a
-    # Σ|cell|² pair self-join scored by the interpreted zip_with
-    # cosine fold.
+    # numpy product per (bucket, chunk, shard) block.
     ea = MZ.cut(P.assign_nearest_cosine(e, cent), "ivf_assign", eager=False)
     return P.bucketed_topk_cosine(ea, k=5)
 
@@ -418,38 +416,14 @@ def sim_ann_ivf(spark, sf_dir):
 )
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (cos >= 0.45; the corpus
-    tops out at ~0.51 so the threshold surfaces the closest pairs).
+    tops out at ~0.51 so the threshold surfaces the closest pairs):
+    the exact pair graph of ``_emb_exact_pairs``.
 
-    Brute-force at test scale; the 100 TB path replaces the self-join
-    with an LSH/IVF bucket key (see sim_ann_ivf) so candidate pairs
-    are generated per bucket instead of all-pairs.
-
-    Streamed side repartitioned before the nested-loop pair scan —
-    same single-split parallelism fix as ``_emb_exact_pairs``.
+    Brute-force at test scale; the 100 TB path replaces the one
+    constant bucket with an LSH/IVF bucket key (see sim_ann_ivf) so
+    candidate pairs are generated per bucket instead of all-pairs.
     """
-    n_cores = spark.sparkContext.defaultParallelism
-    e = P.with_norm(_embs(spark, sf_dir))
-    a = e.repartition(n_cores).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-    )
+    return _emb_exact_pairs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -935,56 +909,35 @@ def sim_ann_lsh(spark, sf_dir):
     """Random-hyperplane (sign-random-projection) bucketed ANN — the
     LSH counterpart to ``sim_ann_ivf``: no centroid fit, buckets come
     from md5-derived hyperplane sign bits, search happens only within
-    a bucket.  One shuffle on the bucket key + per-bucket top-k
-    window; multi-probe (flipping the lowest-margin bits) is the
-    recall knob at scale, same plan shape.  8 bits here so the
-    fixture's 500 vectors land ~2 per bucket and the oracle exercises
-    the sign-parity claim on a dense result (16 bits left all-singleton
-    buckets — a nearly vacuous 6-row check); production picks nbits by
-    target bucket size n/2^nbits.
+    a bucket, through the same block search
+    (``pipeline.bucketed_topk_cosine``).  Multi-probe
+    (``sim_ann_lsh_multiprobe``) is the recall knob at scale, same
+    plan shape.  8 bits here so the fixture's 500 vectors land ~2 per
+    bucket and the oracle exercises the sign-parity claim on a dense
+    result (16 bits left all-singleton buckets — a nearly vacuous
+    6-row check); production picks nbits by target bucket size
+    n/2^nbits.
     """
-    # In-bucket search: pair join + JVM cosine fold, NOT the
-    # bucketed_topk_cosine block kernel that sim_ann_ivf/_trained use.
-    # Measured both ways in round 13: this fixture dials nbits=8 so
-    # buckets hold ~8 vectors (B² ≈ 64 pairs/bucket), and the kernel's
-    # per-bucket cogroup groups + two grouping exchanges cost MORE
-    # than the tiny interpreted fold they replace (1.35 → 1.93 s at
-    # sf0.1, flagged by the bench share gate).  The crossover is
-    # bucket size: production dials nbits for target bucket sizes in
-    # the hundreds, where the kernel's dense matmul wins — swap in
-    # P.bucketed_topk_cosine(e, k=5, index_shards=1, query_chunks=1,
-    # bucket="bucket") at that operating point.
-    from pyspark.sql import Window
+    # Buckets are small, so one block per bucket (index_shards =
+    # query_chunks = 1).
+    return P.bucketed_topk_cosine(
+        _lsh_frame(spark, sf_dir),
+        k=5,
+        index_shards=1,
+        query_chunks=1,
+        bucket="bucket",
+    ).withColumn("rnk", F.col("rnk").cast("long"))
 
-    e = P.lsh_bucket(P.with_norm(_embs(spark, sf_dir)), nbits=8).persist()
-    a = e.select(
-        "bucket", "vec_id",
-        F.col("embedding").alias("va"), F.col("norm").alias("na"),
-    )
-    b = e.select(
-        "bucket",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"), F.col("norm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id", "neighbor_id",
-            P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
-            .alias("c"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "vec_id",
-            F.col("rnk").cast("long").alias("rnk"),
-            "neighbor_id",
-            E.round_to("c", 6).alias("cos_sim"),
-        )
+
+def _lsh_frame(spark, sf_dir):
+    """The corpus with its 8-bit LSH bucket behind a lazy cut, so both
+    sides of the block search read one materialization of the
+    hyperplane folds; spread first, or a one-split scan folds on one
+    core."""
+    return MZ.cut(
+        P.lsh_bucket(P.spread(_embs(spark, sf_dir)), nbits=8),
+        "lsh_bucket",
+        eager=False,
     )
 
 
@@ -1317,56 +1270,20 @@ def sim_ann_lsh_multiprobe(spark, sf_dir):
     8 one-bit-flip neighbor buckets (the buckets a borderline
     hyperplane margin could have landed it in), lifting recall at
     ~(nbits+1)× candidate cost with NO re-hashing and the same plan
-    shape — the query side explodes its probe list and the join stays
-    an equi shuffle on the bucket key.  At 100 TB the probe count
-    (and flipping lowest-|margin| bits first) tunes the recall/cost
-    trade per query.
+    shape — the query frame of the block search explodes its probe
+    list while every index vector stays in its own bucket.  At 100 TB
+    the probe count (and flipping lowest-|margin| bits first) tunes
+    the recall/cost trade per query.
     """
-    from pyspark.sql import Window
-
-    e = P.lsh_bucket(P.with_norm(_embs(spark, sf_dir)), nbits=8).persist()
+    e = _lsh_frame(spark, sf_dir)
     # query side: own bucket + the 8 one-bit flips
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(8)],
     )
-    q = e.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.explode(probes).alias("bucket"),
-    )
-    ix = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("nv"),
-        F.col("norm").alias("nn"),
-        "bucket",
-    )
-    pairs = (
-        q.join(ix, "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            P.cosine(
-                F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn")
-            ).alias("c"),
-        )
-    )
-    rnk = F.row_number().over(
-        Window.partitionBy("q_id").orderBy(F.col("c").desc(), "n_id")
-    )
-    # e stays persisted (two consumers); the sweep/bench harnesses
-    # clearCache between queries — same ownership rule as sim_ann_lsh.
-    return (
-        pairs.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= 5)
-        .select(
-            F.col("q_id").alias("vec_id"),
-            "rnk",
-            F.col("n_id").alias("neighbor_id"),
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
+    q = e.select("vec_id", "embedding", F.explode(probes).alias("bucket"))
+    return P.bucketed_topk_cosine(
+        e, k=5, index_shards=1, query_chunks=1, bucket="bucket", queries=q
     )
 
 
@@ -2332,42 +2249,9 @@ def _emb_exact_pairs(spark, sf_dir):
     ``dedup_cluster_recall`` so the recall denominator is BY
     CONSTRUCTION the same graph the exact baseline clusters.
     Quadratic in the corpus — the measured ground-truth path, never
-    the 100 TB one (that's the IVF variants).
-
-    The non-equi (a_id < b_id) join plans as a nested-loop over the
-    broadcast b side, and its parallelism is the STREAMED side's task
-    count — a local parquet corpus arrives as one split, so without a
-    repartition the whole quadratic scan runs in one or two tasks
-    (found by the r10 sf1 decade: 2 of 32 cores busy for the entire
-    pair scan).  Spreading the streamed side across the cluster is the
-    same fix minhash_lsh_pairs documents; the exchange moves only the
-    narrow (id, vec, norm) projection."""
-    n_cores = spark.sparkContext.defaultParallelism
-    e = P.with_norm(_embs(spark, sf_dir))
-    a = e.repartition(n_cores).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-    )
+    the 100 TB one (that's the IVF variants): the block threshold
+    search over one bucket."""
+    return P.bucketed_cosine_pairs(_embs(spark, sf_dir), 0.45, bucket=None)
 
 
 # ---------------------------------------------------------------------------

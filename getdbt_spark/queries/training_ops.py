@@ -151,77 +151,46 @@ def sim_ann_ivf_multiprobe(spark, sf_dir):
     oracle text); candidate mass is ≤ 2× single-probe and still
     Σ|cell|-bounded per query.  ``sim_recall_multiprobe`` reports the
     recall this buys.  Scale shape: the probe table is (2 rows ×
-    vectors), the search an equi-join on cent_id — hash-partitioned,
-    never all-pairs; one vec_id window takes the top-5 (planned as
-    WindowGroupLimit, a per-partition partial top-k before the
-    shuffle).
+    vectors), the search the per-cell block kernel
+    (``pipeline.bucketed_topk_cosine``) — never all-pairs; one vec_id
+    window folds the per-block top-5s.
 
-    Both pair-scan sides derive from ONE persisted embedding⋈probe
-    frame, exactly like ``sim_ann_ivf_trained``'s ``ea`` — with two
-    lazy sides the trainer lineage (codebook rounds + assignment
-    window) re-executed per side and the join planned against
-    unmaterialized estimates: measured 103 s vs 20 s at sf1 (the r10
-    decade find; single-probe is 16.6 s, so the shared-cache shape is
-    the expected ≈1.2× — the 5× was pure recomputation).
+    Both sides of the search derive from ONE embedding⋈probe frame
+    behind a lazy cut, exactly like ``sim_ann_ivf_trained``'s ``ea``
+    — with two lazy sides the trainer lineage (codebook rounds +
+    assignment window) re-executed per side and the join planned
+    against unmaterialized estimates: measured 103 s vs 20 s at sf1
+    (the r10 decade find; single-probe is 16.6 s, so the shared-cache
+    shape is the expected ≈1.2× — the 5× was pure recomputation).
     """
     return _ivf_top5(_ivf_probe_frame(_embs(spark, sf_dir)), max_probe=2)
 
 
 def _ivf_probe_frame(embs):
-    """The shared trained-IVF search frame: embeddings with L2 norms
-    joined to their nprobe=2 trained-cell assignments, PERSISTED so
-    both pair-scan sides of a downstream search read one
-    materialization (the r10 decade find — lazy sides re-execute the
-    trainer lineage per side, 5× at sf1)."""
-    e = P.with_norm(embs)
-    probes = P.kmeans_probe_assign(e, k=8, iters=2, nprobe=2)
-    return e.join(probes, "vec_id").persist()
+    """The shared trained-IVF search frame: embeddings joined to their
+    nprobe=2 trained-cell assignments, behind a lazy cut so both
+    sides of a downstream search read one materialization (the r10
+    decade find — lazy sides re-execute the trainer lineage per side,
+    5× at sf1)."""
+    probes = P.kmeans_probe_assign(embs, k=8, iters=2, nprobe=2)
+    return MZ.cut(
+        embs.select("vec_id", "embedding").join(probes, "vec_id"),
+        "ivf_probe",
+        eager=False,
+    )
 
 
 def _ivf_top5(ep, max_probe: int):
     """Cosine top-5 within the trained IVF cells of ``ep``
     (``_ivf_probe_frame``'s output): query side probes its
     ``max_probe`` nearest cells, index side stays single-homed
-    (probe_rank 1).  ``max_probe=2`` is ``sim_ann_ivf_multiprobe``
-    byte-for-byte; ``max_probe=1`` is the single-probe search over
-    the same shared frame."""
-    from pyspark.sql import Window
-
-    qa = ep.filter(F.col("probe_rank") <= max_probe).select(
-        "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    na = ep.filter(F.col("probe_rank") == 1).select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    pairs = (
-        qa.join(na, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("c"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "vec_id",
-            "rnk",
-            "neighbor_id",
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
+    (probe_rank 1).  ``max_probe=2`` is ``sim_ann_ivf_multiprobe``;
+    ``max_probe=1`` is the single-probe search over the same shared
+    frame."""
+    return P.bucketed_topk_cosine(
+        ep.filter(F.col("probe_rank") == 1),
+        k=5,
+        queries=ep.filter(F.col("probe_rank") <= max_probe),
     )
 
 
@@ -2665,7 +2634,7 @@ def sim_recall_clustered(spark, sf_dir):
     SAME
     derived corpus.  Scale: the derivation is one map-side transform;
     index builds and the evaluation joins are the verified builders'
-    shapes unchanged (``_ivf_probe_frame`` persisted once and shared
+    shapes unchanged (``_ivf_probe_frame`` cut once and shared
     by both probe depths; ADC stack via ``_ivfpq_top5``); the report
     itself is one lazy aggregate (``_recall_at5``).
     """

@@ -5,6 +5,8 @@ fan-out invariants (SURVEY.md §7.5).
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -707,7 +709,9 @@ def test_corrupt_embeddings_cost_the_vector_not_the_job(spark):
     invalid — NULL per-vector outputs, NULL cosine (never a raw NaN,
     which ranks FIRST under DESC in both engines), excluded from
     k-means training — and one corrupt row can never crash a stage or
-    chain every cluster together."""
+    chain every cluster together.  The block cosine search gives the
+    fold's verdicts, for a NULL component, a NULL row and a short row
+    too."""
     nan, inf = float("nan"), float("inf")
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),          # valid
@@ -716,6 +720,7 @@ def test_corrupt_embeddings_cost_the_vector_not_the_job(spark):
         (3, [nan, nan, nan, nan]),          # all-NaN
         (4, [0.0, 1.0, 0.0, 0.0]),          # valid
         (5, [1.0, 1.0, 0.0, -inf]),         # -Inf component
+        (6, [None, 1.0, 0.0, 0.0]),         # NULL component
     ]
     embs = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
@@ -737,8 +742,15 @@ def test_corrupt_embeddings_cost_the_vector_not_the_job(spark):
     assert q8[4].scale is not None
     assert q8[2].scale is None and all(v is None for v in q8[2].q)
 
-    # cosine: any invalid side -> NULL, valid x valid -> real score
-    e = P.with_norm(embs)
+    # cosine: any invalid side -> NULL, valid x valid -> real score;
+    # a NULL row and a short row are corrupt for the pair searches too
+    corrupt = embs.unionByName(
+        spark.createDataFrame(
+            [(7, None), (8, [1.0, 0.0, 0.0])],
+            "vec_id long, embedding array<float>",
+        )
+    )
+    e = P.with_norm(corrupt)
     a = e.select(F.col("vec_id").alias("ai"),
                  F.col("embedding").alias("va"), F.col("norm").alias("na"))
     b = e.select(F.col("vec_id").alias("bi"),
@@ -751,13 +763,77 @@ def test_corrupt_embeddings_cost_the_vector_not_the_job(spark):
                      F.col("na"), F.col("nb")).alias("c"),
         ).collect()
     }
+    assert len(pairs) == 9 * 8 // 2
     assert pairs[(0, 4)] == 0.0
-    bad = {1, 2, 3, 5}
+    bad = {1, 2, 3, 5, 6, 7, 8}
     assert all(v is None for k, v in pairs.items() if set(k) & bad)
+
+    # block search, both selectors: the fold's verdicts on every side
+    top = {
+        (r.vec_id, r.neighbor_id): r.cos_sim
+        for r in P.bucketed_topk_cosine(corrupt, k=8, bucket=None).collect()
+    }
+    assert len(top) == 9 * 8
+    assert top[(0, 4)] == top[(4, 0)] == 0.0
+    assert all(v is None for k, v in top.items() if set(k) & bad)
+    thr = P.bucketed_cosine_pairs(corrupt, -1.0, bucket=None)
+    assert [tuple(r) for r in thr.collect()] == [(0, 4, 0.0)]
 
     # k-means: trains and assigns over valid vectors only
     km = P.kmeans_quantized(embs, k=2, iters=1)
     assert {r.vec_id for r in km.collect()} == {0, 4}
+
+
+# Per-pair folds that stay in queries/, each for one reason: the
+# IVFADC+R re-rank scores R quantized INTEGER vectors per query (exact
+# int64, no float cosine), and the PCA rounds are integer power
+# iteration, not pair scoring.
+FOLD_ALLOW = {
+    ("training_ops.py", "_ivfpq_top5"),
+    ("training_ops.py", "emb_pca_power_iteration"),
+}
+# Builders whose embedding-pair scan is the block search.
+BLOCK_SEARCH_BUILDERS = {
+    "pipeline_queries.py": (
+        "dedup_embedding_cosine", "_emb_exact_pairs", "sim_ann_lsh",
+        "sim_ann_lsh_multiprobe", "_lsh_frame",
+    ),
+    "training_ops.py": ("_ivf_probe_frame", "_ivf_top5"),
+    "curation.py": (
+        "sem_dedup", "sem_dedup_trained", "_sem_dedup_verdict",
+        "dedup_embedding_cluster_ivf", "_probe_cell_pairs",
+    ),
+}
+
+
+def test_embedding_pair_scans_run_on_the_block_search():
+    """Every embedding-pair search in ``queries/`` goes through
+    ``pipeline.bucketed_topk_cosine`` / ``bucketed_cosine_pairs``: no
+    per-pair ``cosine(``/``zip_with(`` fold outside ``FOLD_ALLOW``,
+    and no ``.persist(`` in the converted builders (their shared
+    frames are lazy ``materialize.cut``s)."""
+    qdir = pathlib.Path(P.__file__).parent / "queries"
+    fold = re.compile(r"\bcosine\(|\bzip_with\(")
+    folds, persists, missing = [], [], []
+    for path in sorted(qdir.glob("*.py")):
+        src = path.read_text()
+        owner = {}
+        for d in ast.parse(src).body:
+            if isinstance(d, ast.FunctionDef):
+                owner.update(
+                    dict.fromkeys(range(d.lineno, d.end_lineno + 1), d.name)
+                )
+        builders = BLOCK_SEARCH_BUILDERS.get(path.name, ())
+        missing += sorted(set(builders) - set(owner.values()))
+        for i, line in enumerate(src.splitlines(), 1):
+            name = owner.get(i, "<module>")
+            if fold.search(line) and (path.name, name) not in FOLD_ALLOW:
+                folds.append(f"{path.name}:{i}")
+            if ".persist(" in line and name in builders:
+                persists.append(f"{path.name}:{i}")
+    assert folds == []
+    assert persists == []
+    assert missing == []
 
 
 def test_blocked_topk_pairs_all_blocks_beyond_aqe_coalescing(spark):

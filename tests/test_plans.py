@@ -45,6 +45,11 @@ GUARDED = [
     # plans.py since r12 but never actually audited here — pin both
     "sim_ann_ivfpq_normalized",
     "sim_ann_ivfpq_scaled_k",
+    # the embedding-pair scans on the block search
+    "dedup_embedding_cosine",
+    "sim_ann_lsh",
+    "sim_ann_lsh_multiprobe",
+    "sem_dedup",
 ]
 
 # The former vertaaltabel × week-spine crossJoins are now join-free

@@ -34,8 +34,6 @@ THRESH = 0.45
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from getdbt_spark import pipeline as P
     from getdbt_spark.io import load_table
     from getdbt_spark.session import get_spark
@@ -43,7 +41,7 @@ def main() -> None:
     spark = get_spark(
         "cluster_recall_margin", master="local[8]", shuffle_partitions=8
     )
-    e = P.with_norm(load_table(spark, SF_DIR, "embeddings"))
+    e = load_table(spark, SF_DIR, "embeddings")
 
     # (1) full cell ranking per vector (bounded: <= k rows per
     # vector — non-finite vectors are filtered upstream and a corpus
@@ -80,36 +78,11 @@ def main() -> None:
         )
     deep = {v for v in vec_ids if len(dists[v]) >= 3}
 
-    # (2) exact pairs at the registered threshold (brute force — the
-    # oracle baseline, fine at analysis scale)
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    from getdbt_spark import functions as E
-
+    # (2) exact pairs at the registered threshold (the block search
+    # over one bucket — the oracle baseline)
     exact = {
         (r["a_id"], r["b_id"])
-        for r in a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "c",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("c") >= THRESH)
-        .select("a_id", "b_id")
-        .collect()
+        for r in P.bucketed_cosine_pairs(e, THRESH, bucket=None).collect()
     }
 
     def shares_top(aid: int, bid: int, pa: int, pb: int) -> bool:

@@ -40,10 +40,8 @@ SIZE_CUTS = [50, 75, 87, 95]
 
 
 def main() -> None:
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from getdbt_spark import functions as E
     from getdbt_spark import pipeline as P
     from getdbt_spark.io import load_table
     from getdbt_spark.queries import load_all
@@ -57,6 +55,7 @@ def main() -> None:
         NPQ_RERANK,
         NPQ_SUBDIMS,
         NPQ_SUBSPACES,
+        _ivf_top5,
         _ivfpq_top5,
         _unit_embs,
     )
@@ -100,28 +99,9 @@ def main() -> None:
     n_q = exact5.select("vec_id").distinct().count()
 
     # exact near-dup pairs at the dedup family's threshold
-    e = P.with_norm(ce).localCheckpoint()
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
+    e = ce.localCheckpoint()
     xp = (
-        a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "c",
-            E.round_to(
-                P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
-                6,
-            ),
-        )
-        .filter(F.col("c") >= 0.45)
+        P.bucketed_cosine_pairs(e, 0.45, bucket=None)
         .select("a_id", "b_id")
         .localCheckpoint()
     )
@@ -134,41 +114,12 @@ def main() -> None:
     ep = e.join(probes, "vec_id").localCheckpoint()
 
     def sim_recall(p: int) -> float:
-        qa = ep.filter(F.col("probe_rank") <= p).select(
-            "cent_id",
-            "vec_id",
-            F.col("embedding").alias("va"),
-            F.col("norm").alias("na"),
+        hits = (
+            _ivf_top5(ep, max_probe=p)
+            .select("vec_id", "neighbor_id")
+            .join(exact5, ["vec_id", "neighbor_id"])
+            .count()
         )
-        na_ = ep.filter(F.col("probe_rank") == 1).select(
-            "cent_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("vb"),
-            F.col("norm").alias("nb"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.desc("c"), F.asc("neighbor_id")
-        )
-        top5 = (
-            qa.join(na_, "cent_id")
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select(
-                "vec_id",
-                "neighbor_id",
-                E.round_to(
-                    P.cosine(
-                        F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                    ),
-                    6,
-                ).alias("c"),
-            )
-            .distinct()
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 5)
-        )
-        hits = top5.select("vec_id", "neighbor_id").join(
-            exact5, ["vec_id", "neighbor_id"]
-        ).count()
         return round(hits / (5 * n_q), 4) if n_q else None
 
     def pair_recall(p: int) -> float:

@@ -1,9 +1,10 @@
-"""Empirical scaling audit → SCALING.md.
+"""Empirical scaling audit: per-decade scaling exponents.
 
 Plan inspection (PLANS.md) argues each operator *should* scale; this
-tool MEASURES it: a representative query subset runs at sf0.001 /
-0.01 / 0.1 (10× data steps) in one session, and the observed scaling
-exponent α = log10(t_next / t_prev) per decade is reported.  Reading:
+tool MEASURES it: queries and flagship models run at a list of scale
+factors (10× data steps) in one warm session, and the observed
+scaling exponent α = log10(t_next / t_prev) per decade is reported.
+Reading:
 
 - α ≈ 0      fixed-overhead-bound at these sizes (scheduling, codegen,
              broadcast builds) — data cost invisible; fine.
@@ -12,26 +13,41 @@ exponent α = log10(t_next / t_prev) per decade is reported.  Reading:
 - α > 1.3    superlinear — a quadratic-ish term is growing faster than
              the data; at 100 TB this operator is a bug.  Flagged ⚠.
 
-The LAST decade (0.01 → 0.1) is the signal; the first mostly measures
-overhead.  Absolute numbers are host-dependent (see bench.py's
-canary); exponents are not.
+The LAST decade is the signal; the first mostly measures overhead.
+Absolute numbers are host-dependent (see bench.py's canary); exponents
+are not.
 
-Usage: python tools/scaling_curve.py   (writes SCALING.md)
+One timing loop, bench.py's methodology: warm-up, noop sink, min of
+two reps per (id, sf), SQL cache cleared between reps, model DAGs in
+production checkpoint mode.
+
+Usage:
+  python tools/scaling_curve.py                      # writes SCALING.md
+  python tools/scaling_curve.py --sf 0.1,1 --ids a,b # prints table rows
+  python tools/scaling_curve.py --sf 1,10 --ids a,b  # also merges the
+                                                     # rows into
+                                                     # SCALING_SF10.json
+                                                     # (needs sf1 AND
+                                                     # sf10 in --sf)
+
+sf0.001–0.1 are the test corpora; sf1 and sf10 come from
+``tools/gen_sf1.py`` under ``.scale_data/`` (sf10 stacks the growth
+law twice: ``GEN_SF_SRC=.scale_data/sf1``, prefix ``d``).
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import math
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-# sf1 (tools/gen_sf1.py) joins the curve when generated: facts 10×,
-# documents 10× with per-copy disjoint vocabulary, embeddings 5× with
-# seeded noise — the corpus family's own growth law one decade up.
+DEFAULT_SFS = ["0.001", "0.01", "0.1"]  # + "1" when generated
 
 # One representative per plan family.
 SUBSET = [
@@ -54,127 +70,100 @@ SUBSET = [
     "win_forward_fill",       # analytic-window extension family
 ]
 
-
-# Flagship end-to-end models, measured one decade ABOVE the bench SF
-# (VERDICT r4 #6: the dashboard's 100× claim rested on plan shape
-# alone).  sf1 is generated by tools/gen_sf1.py — key-shifted 10×
-# replication of sf0.1 following the driver generator's growth law.
+# Flagship end-to-end models (VERDICT r4 #6: the dashboard's 100×
+# claim rested on plan shape alone).
 MODEL_SUBSET = ["model_streams_daily_v4", "model_dashboard_channel_weekly"]
-SF1 = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".scale_data",
-    "sf1",
-)
-MODEL_SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1", SF1]
 
 
-def main() -> None:
-    from getdbt_spark.queries import QUERIES, load_all
-    from getdbt_spark.session import get_spark
+def sf_dir(label: str) -> str:
+    """Directory of scale factor ``label``: a test corpus beside the
+    CLI's default one, else the generated ``.scale_data/sf<label>``."""
+    from getdbt_spark.__main__ import DEFAULT_SF_DIR
 
-    import bench
+    test = os.path.join(os.path.dirname(DEFAULT_SF_DIR), f"sf{label}")
+    return test if os.path.isdir(test) else os.path.join(
+        REPO, ".scale_data", f"sf{label}"
+    )
 
-    load_all()
-    spark = get_spark(app_name="scaling_curve")
-    bench._warmup(spark, SFS[0])
 
-    have_sf1 = os.path.isdir(SF1)
-    sfs = SFS + ([SF1] if have_sf1 else [])
-    t: dict[str, list[float]] = {q: [] for q in SUBSET if q in QUERIES}
-    for sf_dir in sfs:
-        for q in t:
-            t0 = time.perf_counter()
-            QUERIES[q](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t[q].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-
-    # flagship models: production materialization mode, one decade up
+def _time(spark, name: str, sf: str) -> float:
+    """Min of two noop-sink runs of query or model ``name`` at ``sf``."""
+    from getdbt_spark.queries import QUERIES
     from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
 
-    tm: dict[str, list[float]] = {m: [] for m in MODEL_SUBSET}
-    for sf_dir in MODEL_SFS:
-        if not os.path.isdir(sf_dir):
-            continue
-        for m in tm:
-            t0 = time.perf_counter()
-            _run_model(
-                spark, sf_dir, _MODEL_QUERIES[m][0], reuse="checkpoint"
-            ).write.format("noop").mode("overwrite").save()
-            tm[m].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
+    best = float("inf")
+    for _rep in range(2):
+        t0 = time.perf_counter()
+        if name in _MODEL_QUERIES:
+            df = _run_model(
+                spark, sf_dir(sf), _MODEL_QUERIES[name][0], reuse="checkpoint"
+            )
+        else:
+            df = QUERIES[name](spark, sf_dir(sf))
+        df.write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+        spark.catalog.clearCache()
+    return best
 
+
+def _alphas(ts: list[float]) -> list[float]:
+    return [
+        math.log10(ts[i + 1] / ts[i]) if ts[i] > 0 else float("nan")
+        for i in range(len(ts) - 1)
+    ]
+
+
+def _rows(times: dict[str, list[float]]) -> list[str]:
+    """Markdown rows, slowest at the largest SF first."""
     rows = []
-    flagged = 0
-    for q, ts in sorted(t.items(), key=lambda kv: -kv[1][-1]):
-        alphas = [
-            math.log10(ts[i + 1] / ts[i]) if ts[i] > 0 else float("nan")
-            for i in range(len(ts) - 1)
-        ]
-        mark = "⚠" if alphas[-1] > 1.3 else "ok"
-        flagged += mark == "⚠"
-        rows.append(
-            f"| {q} | "
-            + " | ".join(f"{x:.2f}" for x in ts)
-            + " | "
-            + " | ".join(f"{a:+.2f}" for a in alphas)
-            + f" | {mark} |"
-        )
-
-    model_rows = []
-    for m, ts in sorted(tm.items(), key=lambda kv: -kv[1][-1]):
-        alphas = [
-            math.log10(ts[i + 1] / ts[i]) if ts[i] > 0 else float("nan")
-            for i in range(len(ts) - 1)
-        ]
+    for name, ts in sorted(times.items(), key=lambda kv: -kv[1][-1]):
+        alphas = _alphas(ts)
         mark = "⚠" if alphas and alphas[-1] > 1.3 else "ok"
-        flagged += mark == "⚠"
-        model_rows.append(
-            f"| {m} | "
-            + " | ".join(f"{x:.2f}" for x in ts)
-            + " | "
-            + " | ".join(f"{a:+.2f}" for a in alphas)
+        rows.append(
+            f"| {name} | "
+            + " | ".join([f"{x:.2f}" for x in ts] + [f"{a:+.2f}" for a in alphas])
             + f" | {mark} |"
         )
+    return rows
 
+
+def _header(first: str, sfs: list[str]) -> list[str]:
+    cols = [f"t({s}) s" for s in sfs] + [
+        f"α{i + 1}" for i in range(len(sfs) - 1)
+    ]
+    return [
+        f"| {first} | " + " | ".join(cols) + " | verdict |",
+        "|---|" + "---|" * (len(cols) + 1),
+    ]
+
+
+def _write_scaling_md(sfs, q_times, m_times) -> None:
+    rows, model_rows = _rows(q_times), _rows(m_times)
+    flagged = sum(r.endswith("⚠ |") for r in rows + model_rows)
     out = [
         "# SCALING — measured per-decade scaling exponents",
         "",
         "Generated by `python tools/scaling_curve.py`: each query runs",
-        "at sf0.001 / 0.01 / 0.1"
-        + (" / 1 (sf1 via `tools/gen_sf1.py`:" if have_sf1 else " (")
-        + " 10× data per step, one warm",
-        "session, cache cleared between runs).  α = log10(t_next/",
-        "t_prev) per decade: ≈0 overhead-bound, ≈1 linear (the design",
-        "asymptote), >1.3 superlinear = ⚠ scale bug.  The LAST decade",
-        "is the signal; absolute seconds are host-dependent, exponents",
-        "are not.",
+        f"at sf{' / '.join(sfs)} (10× data per step; sf1 via",
+        "`tools/gen_sf1.py`), one warm session, min of two reps, cache",
+        "cleared between runs.  α = log10(t_next/t_prev) per decade:",
+        "≈0 overhead-bound, ≈1 linear (the design asymptote), >1.3",
+        "superlinear = ⚠ scale bug.  The LAST decade is the signal;",
+        "absolute seconds are host-dependent, exponents are not.",
         "",
-        "| query | "
-        + " | ".join(f"t({s}) s" for s in ["0.001", "0.01", "0.1"] + (["1"] if have_sf1 else []))
-        + " | "
-        + " | ".join(f"α{i+1}" for i in range(3 if have_sf1 else 2))
-        + " | verdict |",
-        "|---|" + "---|" * ((4 if have_sf1 else 3) + (3 if have_sf1 else 2) + 1),
+        *_header("query", sfs),
         *rows,
         "",
-        "## Flagship models (one decade above the bench SF)",
+        "## Flagship models",
         "",
         "Production materialization mode (`reuse=\"checkpoint\"`, the",
         "full model DAG under one timing).  sf1 is generated by",
         "`tools/gen_sf1.py` — key-shifted 10× replication of sf0.1",
         "following the driver generator's own growth law (facts 10×,",
         "catalogs fixed), so the 0.1 → 1 decade measures the engine on",
-        "the corpus family's real growth, not a synthetic worst case."
-        if have_sf1
-        else "(sf1 missing — run `python tools/gen_sf1.py` first; "
-        "table below covers sf0.01 → sf0.1 only.)",
+        "the corpus family's real growth, not a synthetic worst case.",
         "",
-        "| model | t(0.01) s | t(0.1) s | t(1) s | α₁ | α₂ | verdict |"
-        if have_sf1
-        else "| model | t(0.01) s | t(0.1) s | α₁ | verdict |",
-        "|---|---|---|---|---|---|---|" if have_sf1 else "|---|---|---|---|---|",
+        *_header("model", sfs),
         *model_rows,
         "",
         f"Flagged superlinear: {flagged}.",
@@ -191,10 +180,92 @@ def main() -> None:
         "quadratic term hasn't crossed the overhead floor yet at",
         "these sizes, not that it scales.",
     ]
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "SCALING.md"), "w") as fh:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")
     print(f"SCALING.md written ({len(rows)} queries, {flagged} flagged)")
+
+
+def _merge_sf10(sfs, times, canary_spark) -> None:
+    """Merge the sf1/sf10 times into SCALING_SF10.json: a subset run
+    must not drop the committed rows for the other ids, and each row's
+    two times come from one session."""
+    import bench
+
+    path = os.path.join(REPO, "SCALING_SF10.json")
+    queries = {}
+    if os.path.exists(path):
+        with open(path) as fh:
+            queries = json.load(fh).get("queries", {})
+    for name, ts in times.items():
+        row = {
+            f"sf{s}": round(t, 3)
+            for s, t in zip(sfs, ts)
+            if s in ("1", "10")
+        }
+        row["alpha4"] = round(math.log10(row["sf10"] / row["sf1"]), 2)
+        queries[name] = row
+    with open(path, "w") as fh:
+        json.dump(
+            {
+                "metric": "heavy_family_sf10_decade",
+                "queries": queries,
+                "canary_cpu_sec": bench._host_canary(),
+                "canary_spark_sec": canary_spark,
+                "passes": 2,
+                "superlinear": [
+                    q
+                    for q, r in queries.items()
+                    if (r.get("alpha4") or 0) > 1.3
+                ],
+            },
+            fh,
+            indent=1,
+        )
+    print(f"SCALING_SF10.json merged ({len(times)} ids)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", help="comma-separated scale factors")
+    ap.add_argument("--ids", help="comma-separated query/model ids")
+    args = ap.parse_args()
+
+    import bench
+    from getdbt_spark.queries import QUERIES, load_all
+    from getdbt_spark.queries.model_queries import _MODEL_QUERIES
+    from getdbt_spark.session import get_spark
+
+    load_all()
+    sfs = args.sf.split(",") if args.sf else DEFAULT_SFS + (
+        ["1"] if os.path.isdir(sf_dir("1")) else []
+    )
+    missing = [s for s in sfs if not os.path.isdir(sf_dir(s))]
+    if missing:
+        raise SystemExit(f"missing {missing}; run tools/gen_sf1.py first")
+    names = (
+        args.ids.split(",")
+        if args.ids
+        else [q for q in SUBSET if q in QUERIES] + MODEL_SUBSET
+    )
+    spark = get_spark(app_name="scaling_curve")
+    bench._warmup(spark, sf_dir(sfs[0]))
+    canary_spark = bench._spark_canary(spark)
+
+    times: dict[str, list[float]] = {}
+    for name in names:
+        times[name] = [_time(spark, name, s) for s in sfs]
+        print(f"# {name}: {times[name]}", file=sys.stderr)
+
+    if {"1", "10"} <= set(sfs):
+        _merge_sf10(sfs, times, canary_spark)
+    if args.ids:
+        print("\n".join(_header("id", sfs) + _rows(times)))
+        return
+    _write_scaling_md(
+        sfs,
+        {n: t for n, t in times.items() if n not in _MODEL_QUERIES},
+        {n: t for n, t in times.items() if n in _MODEL_QUERIES},
+    )
 
 
 if __name__ == "__main__":
